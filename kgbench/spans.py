@@ -99,6 +99,17 @@ def tree_pids(root: int | None = None) -> list[int]:
     return out
 
 
+def become_subreaper() -> None:
+    """Make orphaned descendants (Python workers whose JVM has exited) come
+    back to this process, so that it can wait for them and see them in
+    ``tree_pids``."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    with contextlib.suppress(OSError, AttributeError):
+        ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
 def tree_cpu_s(root: int | None = None) -> float:
     """User + system CPU seconds of the live process tree plus its reaped
     children (so Python workers that already exited still count)."""

@@ -8,15 +8,17 @@ Set A uses seeds 1..runs, set B seeds 101..100+runs; runs alternate between
 the sets. For every end-to-end metric it prints each set's median and
 quartiles, the spread of all runs (quartile distance / median) and the gap
 between the two set medians, each against the metric's bound, plus the share
-of failed operations per set. ``--traced`` adds one traced run per workload
-and reports the tracing overhead (traced round wall minus the untraced
-median) and the share of the round no layer span covers. Writes the raw
-results as JSON to ``--out`` when given.
+of failed operations per set; it stops with an error when a run leaves a
+process running. ``--traced`` adds one traced run per workload and reports
+the tracing overhead (traced round wall minus the untraced median) and the
+share of the round no layer span covers. Writes the raw results as JSON to
+``--out`` when given.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import statistics
@@ -25,6 +27,9 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(0, HERE)
+
+from spans import become_subreaper, tree_pids  # noqa: E402
 
 
 def run_once(workload: str, seed: int, seconds: int, trace: int) -> dict:
@@ -35,6 +40,13 @@ def run_once(workload: str, seed: int, seconds: int, trace: int) -> dict:
     if p.returncode != 0:
         sys.stderr.write(p.stderr[-3000:])
         raise SystemExit(f"{workload} seed {seed} exited {p.returncode}")
+    # orphans of the run come back to this subreaper: any left is the run's
+    with contextlib.suppress(ChildProcessError):
+        while os.waitpid(-1, os.WNOHANG)[0]:
+            pass
+    left = [q for q in tree_pids() if q != os.getpid()]
+    if left:
+        raise SystemExit(f"{workload} seed {seed} left processes running: {sorted(left)}")
     return json.loads(p.stdout.strip().splitlines()[-1])
 
 
@@ -50,6 +62,7 @@ def main() -> int:
     ap.add_argument("--traced", action="store_true")
     ap.add_argument("--out")
     args = ap.parse_args()
+    become_subreaper()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     workloads = args.workload or [w["name"] for w in spec["workloads"]]
