@@ -646,8 +646,8 @@ def _d_neardup_incremental(spark, sf):  # delta-vs-corpus dedup (no self-join)
 def _d_dedup_clusters(spark, sf):  # end-to-end dedup: doc -> cluster -> keep?
     # exact-dup collapse + verified near-dup pairs + connected components;
     # oracle = the all-pairs jaccard SQL closed transitively with a
-    # recursive CTE (an independent closure computation, not min-label
-    # propagation)
+    # recursive CTE (an independent closure computation, not the
+    # operator's union-find or star-star rounds)
     return dd.dedup_clusters(_t(spark, sf, "documents"), threshold=0.5)
 
 
@@ -1571,7 +1571,7 @@ def _g_random_walks(spark, sf):  # deterministic hash-random walk corpus
     return gr.random_walks(halving.union(side), seeds, length=4)
 
 
-def _g_components(spark, sf):  # iterative min-label connected components
+def _g_components(spark, sf):  # connected components via the package CC entry
     # structured graph with closed-form components: clusters of 4
     # consecutive ids (each id -> its cluster base) plus a bridge edge at
     # every multiple of 100 merging two adjacent clusters. The oracle is
@@ -1937,9 +1937,10 @@ def _t_hll_merge(spark, sf):  # mergeable HLL: register-wise max rollup
 
 
 def _g_components_starstar(spark, sf):  # O(log n)-round CC (Kiveris et al.)
-    # chain-heavy graph (the regime min-label is worst at): blocks of 32
-    # consecutive ids chained, a bridge at every multiple of 640 merging
-    # two adjacent blocks. The oracle is the ANALYTIC component id.
+    # chain-heavy graph (the regime label propagation is worst at):
+    # blocks of 32 consecutive ids chained, a bridge at every multiple of
+    # 640 merging two adjacent blocks. The oracle is the ANALYTIC
+    # component id.
     docs = _t(spark, sf, "documents").select("doc_id")
     d = F.col("doc_id")
     chain = docs.where(d % 32 != 0).select(

@@ -10,17 +10,19 @@ pairwise-comparing all surfaces:
                            band hash — uniformly distributed by construction);
   3. ``verify_pairs``    — exact word-set Jaccard >= threshold inside a
                            vectorized batch UDF (kills LSH false positives);
-  4. ``connected_components`` — iterative min-label propagation over the
-                           verified edge set with localCheckpoint truncation;
+  4. ``connected_components`` — over the verified edge set: a driver
+                           union-find when it is dictionary-sized, else
+                           star-star rounds (graph.components_starstar);
   5. ``canon_map``       — component -> lexicographically-smallest member
                            surface as the canonical representative.
 
 Skew notes (the north rule's explicit concern):
-  * min-label aggregation is a partial-aggregable ``min`` — Spark's hash
+  * a hub component costs the driver union-find nothing extra; star-star's
+    per-round aggregation is a partial-aggregable ``min`` — Spark's hash
     aggregate does map-side combine, which IS the salting two-phase for
     idempotent monoids (no hot reducer even if one component spans 30% of
     rows — the hub fixture);
-  * the label join uses AQE skew-join splitting for hub vertices
+  * star-star's center join uses AQE skew-join splitting for hub vertices
     (spark.sql.adaptive.skewJoin.enabled, set in session.py);
   * band buckets are bounded because input surfaces are pre-deduplicated
     (``.distinct()``), so identical strings never flood one bucket.
@@ -32,7 +34,7 @@ driver and executors agree exactly.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -120,96 +122,72 @@ def verify_pairs(
     return pairs.mapInPandas(run, schema=_EDGES_SCHEMA)
 
 
+SMALL_GRAPH_THRESHOLD = 200_000
+
+
+def union_find_min(pairs: Iterable[tuple[int, int]]) -> dict[int, int]:
+    """Driver union-find over (a, b) id pairs -> {id: min id of its
+    component} for every id that occurs in a pair. Roots are always the
+    smaller id, so each root IS its component's min."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iter: int = 20,
     partitions: int = 16,
-    strict: bool = False,
 ) -> DataFrame:
-    """Min-label propagation -> (nid, component) with component = min nid.
+    """-> (nid, component) with component = min nid of the component.
 
-    vertices: (nid long); edges: (a long, b long). Iterates until no label
-    changes (diameter-bounded; alias-variant clusters are stars, so 2-4
-    rounds). Each round: symmetric neighbor-label min, map-side-combined;
-    ``checkpointing.cut_lineage`` truncates the growing plan (SURVEY §4
-    custom item 3; localCheckpoint locally, reliable checkpoint when a
-    checkpoint dir is set).
+    vertices: (nid long), a superset of the edge endpoints; edges:
+    (a long, b long). Vertices in no edge keep their own id.
 
-    ``partitions`` sizes the per-iteration shuffles to the DATA, not the
-    cluster: entity-dictionary graphs are orders of magnitude smaller than
-    the corpus, and over-parallelizing the tiny iterative joins just buys
-    scheduler overhead. Scale it up with the surface count (e.g. n/100k).
+    The package's one CC entry, one algorithm per side of a size check
+    on the edge set (cut once, so neither side recomputes it):
 
-    ``strict=True`` RAISES if labels have not converged after ``max_iter``
-    rounds instead of silently returning partial components — required by
-    callers whose graphs can have long chains (dedup clusters of
-    incrementally-edited documents have diameter ~chain length, unlike the
-    star-shaped alias clusters this default was tuned for). Each round
-    propagates 2 hops, so ``max_iter >= ceil(diameter/2)`` suffices:
-    convergence exactly at the boundary round is detected by ONE extra
-    single-hop probe (the in-loop check needs a change-free round, which a
-    boundary convergence never gets), so strict mode raises only on
-    genuine non-convergence.
+    * at most ``SMALL_GRAPH_THRESHOLD`` edges: collect them through Arrow
+      and run :func:`union_find_min` on the driver — a few jobs, no hop
+      limit. Verified canon/dedup edge sets are far smaller than the band
+      or candidate rows they come from;
+    * above it: :func:`graph.components_starstar` — O(log n) rounds
+      whatever the diameter, ``max_iter`` rounds at most (it raises
+      rather than return split components), ``partitions`` sizing its
+      initial pair-set shuffle.
     """
-    sym = cut_lineage(
-        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .repartition(partitions, "a")
-    )
-    labels = cut_lineage(vertices.select(
-        F.col("nid"), F.col("nid").alias("component")
-    ).repartition(partitions, "nid"))
-    def step(lbl):
-        neighbor = (
-            sym.join(lbl, sym["a"] == lbl["nid"])
-            .select(F.col("b").alias("nid"), F.col("component"))
+    edges = cut_lineage(edges.select("a", "b"))
+    pdf = edges.limit(SMALL_GRAPH_THRESHOLD + 1).toPandas()
+    if len(pdf) <= SMALL_GRAPH_THRESHOLD:
+        roots = union_find_min(zip(pdf["a"].tolist(), pdf["b"].tolist()))
+        labels = edges.sparkSession.createDataFrame(
+            pd.DataFrame(
+                {"nid": list(roots), "component": list(roots.values())},
+                dtype="int64",
+            ),
+            schema="nid long, component long",
         )
-        return (
-            lbl.unionByName(neighbor)
-            .repartition(partitions, "nid")
-            .groupBy("nid")
-            .agg(F.min("component").alias("component"))
-        )
-
-    for _ in range(max_iter):
-        # two propagation hops per convergence check: alias-variant clusters
-        # are stars (diameter <= 3), so this halves the action count while
-        # localCheckpoint still truncates lineage every round
-        new_labels = cut_lineage(step(step(labels)))
-        # existence of ONE improved label decides the round — limit(1)
-        # lets the probe job stop at the first hit instead of counting
-        # every improvement
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "nid")
-            .where(F.col("n.component") < F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
     else:
-        if strict:
-            # the loop's change check trails by one round: labels that
-            # converged exactly at round max_iter still report changed > 0
-            # (they improved INTO the fixpoint). One single-hop probe
-            # settles it — a fixpoint is unchanged under one more step.
-            probe_changed = (
-                step(labels).alias("n")
-                .join(labels.alias("o"), "nid")
-                .where(F.col("n.component") < F.col("o.component"))
-                .count()
-            )
-            if probe_changed > 0:
-                raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} "
-                    f"rounds ({2 * max_iter} propagation hops) — a "
-                    f"component has diameter > {2 * max_iter}; raise "
-                    f"max_iter"
-                )
-    return labels
+        from .graph import components_starstar
 
-
-SMALL_GRAPH_THRESHOLD = 200_000
+        labels = components_starstar(
+            edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+            max_iter, partitions,
+        ).select(F.col("node").alias("nid"), "component")
+    return vertices.join(labels, "nid", "left").select(
+        "nid", F.coalesce("component", "nid").alias("component")
+    )
 
 
 def canon_map_local(

@@ -406,12 +406,15 @@ def dedup_clusters(
     id). Docs in no pair are their own singleton cluster.
 
     100 TB shape: the exact-dup map is one md5 groupBy (map-side
-    combined); near-dup verification already touches candidates only; the
-    connected-components loop (canon's min-label propagation) runs on the
-    PAIR GRAPH — dup-cluster-sized, never corpus-sized — and the cluster
-    labels join back to the corpus as a broadcast-sized relation for any
-    realistic dup rate (falls back to a shuffle join past the broadcast
-    threshold, still keyed on the md5 the corpus already grouped by).
+    combined); near-dup verification already touches candidates only;
+    connected components (canon.connected_components: a driver union-find
+    for dictionary-sized pair sets, star-star rounds above, no hop limit
+    either way — near-dup graphs can carry long CHAINS of incrementally
+    edited docs) run on the PAIR GRAPH — dup-cluster-sized, never
+    corpus-sized — and the cluster labels join back to the corpus as a
+    broadcast-sized relation for any realistic dup rate (falls back to a
+    shuffle join past the broadcast threshold, still keyed on the md5 the
+    corpus already grouped by).
     """
     from .canon import connected_components
 
@@ -426,13 +429,7 @@ def dedup_clusters(
         .unionByName(pairs.select(F.col("b").alias("nid")))
         .distinct()
     )
-    # strict: near-dup graphs can carry long CHAINS (a doc edited
-    # incrementally, each version similar to its neighbor) — unlike the
-    # star-shaped alias clusters CC's default was tuned for, so silent
-    # non-convergence would split one true cluster into several. 100
-    # rounds covers diameter <= 200 (boundary convergence is probe-
-    # verified, not spuriously failed); beyond that, the loud failure.
-    labels = connected_components(verts, pairs, max_iter=100, strict=True)
+    labels = connected_components(verts, pairs)
     return (
         doc_rep.join(labels, doc_rep["rep"] == labels["nid"], "left")
         .select(

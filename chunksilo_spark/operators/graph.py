@@ -841,18 +841,15 @@ def two_hop_counts(edges: DataFrame, sources: DataFrame) -> DataFrame:
     )
 
 
-def weak_components(
-    edges: DataFrame, max_iter: int = 20, strict: bool = False
-) -> DataFrame:
+def weak_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Weakly-connected components of a (src, dst) long-id edge set ->
     (node, component) with component = min member id.
 
-    Delegates to the canonicalization stage's min-label propagation
-    (operators/canon.connected_components: symmetric two-hop rounds,
-    map-side-combined min aggregation — the salting-equivalent for an
-    idempotent monoid — and localCheckpoint lineage cuts), which is already
-    generic over long vertex ids; this wrapper just derives the vertex set
-    and adapts column names for graph callers."""
+    Delegates to the package's one CC entry,
+    operators/canon.connected_components (driver union-find for
+    dictionary-sized edge sets, :func:`components_starstar` above), which
+    is generic over long vertex ids; this wrapper just derives the vertex
+    set and adapts column names for graph callers."""
     from .canon import connected_components
 
     e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -861,16 +858,15 @@ def weak_components(
         .union(e.select(F.col("b").alias("nid")))
         .distinct()
     )
-    return connected_components(
-        vertices, e, max_iter=max_iter, strict=strict
-    ).select(F.col("nid").alias("node"), "component")
+    return connected_components(vertices, e, max_iter).select(
+        F.col("nid").alias("node"), "component"
+    )
 
 
 def components_starstar(
     edges: DataFrame,
     max_iter: int = 16,
     partitions: int = 32,
-    strict: bool = True,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
@@ -878,15 +874,19 @@ def components_starstar(
     (node, component) with component = min member id — the same output
     contract as :func:`weak_components`, pinned by parity test.
 
-    WHY a second CC implementation: min-label propagation converges in
-    O(diameter) rounds — fine for the star-shaped alias clusters it was
-    built for, but a web graph's giant component has diameter in the
-    dozens, and each round is a corpus-sized shuffle. Star-star
-    contracts components in O(log n) rounds REGARDLESS of diameter
-    (each large-star halves the height of every tree), so at 10^12
-    edges it replaces ~diameter shuffles with ~log n of them. This is
-    the CC the canonicalization stage should route to when dedup-chain
-    graphs (diameter ~ chain length) dominate.
+    WHY star-star is the package's iterative CC: label propagation
+    converges in O(diameter) rounds, but a web graph's giant component
+    has diameter in the dozens and near-dup chains (a doc edited
+    incrementally) have diameter ~ chain length, and each round is a
+    corpus-sized shuffle. Star-star contracts components in O(log n)
+    rounds REGARDLESS of diameter (each large-star halves the height of
+    every tree), so at 10^12 edges it replaces ~diameter shuffles with
+    ~log n of them. canon.connected_components routes here for edge sets
+    too large for its driver union-find.
+
+    Raises if the pairs have not reached the fixpoint after ``max_iter``
+    rounds, never returning split components. ``partitions`` sizes the
+    initial pair-set shuffle.
 
     Round algebra, operating on a canonically-oriented pair set
     (a > b, a != b):
@@ -922,6 +922,7 @@ def components_starstar(
         .select(
             F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
         )
+        .repartition(partitions, "a")
         .distinct()
     )
 
@@ -953,6 +954,17 @@ def components_starstar(
             .distinct()
         )
 
+    def differs(new_p: DataFrame, old_p: DataFrame, n_old: int):
+        # one count action per check (a checkpointed relation recounts
+        # cheaply), plus the anti-join only when sizes tie; the anti-join
+        # needs only EXISTENCE of a changed pair, so limit(1) lets the
+        # job stop at the first hit instead of counting all of them
+        n_new = new_p.count()
+        return n_new, (
+            n_new != n_old
+            or new_p.join(old_p, ["a", "b"], "left_anti").limit(1).count() > 0
+        )
+
     # TWO star rounds per materialization + convergence check: every
     # cut/count/anti-join is a full job submission, and at O(log n) total
     # rounds those fixed costs are ~half the wall at bench scale (and the
@@ -963,7 +975,6 @@ def components_starstar(
     # a no-op and the two-rounds-apart comparison still detects it.
     n_prev = p.count()
     rounds = 0
-    converged = False
     while rounds < max_iter:
         stepped = small_star(large_star(p))
         if rounds + 2 <= max_iter:
@@ -972,24 +983,20 @@ def components_starstar(
         else:
             rounds += 1
         new_p = cut_lineage(stepped)
-        # one count action per check (the checkpointed relation recounts
-        # cheaply), plus the anti-join only when sizes tie; the anti-join
-        # needs only EXISTENCE of a changed pair, so limit(1) lets the
-        # job stop at the first hit instead of counting all of them
-        n_new = new_p.count()
-        changed = (
-            n_new != n_prev
-            or new_p.join(p, ["a", "b"], "left_anti").limit(1).count() > 0
-        )
+        n_new, changed = differs(new_p, p, n_prev)
         p, n_prev = new_p, n_new
         if not changed:
-            converged = True
             break
-    if not converged and strict:
-        raise RuntimeError(
-            f"components_starstar did not converge in {max_iter} "
-            "rounds — raise max_iter (expected O(log n) rounds)"
-        )
+    else:
+        # the in-loop check compares states two rounds apart, so a
+        # fixpoint first reached in the last allowed round reads as
+        # changed; one probe round settles it — a fixpoint reproduces
+        # itself under one more round
+        if differs(small_star(large_star(p)), p, n_prev)[1]:
+            raise RuntimeError(
+                f"components_starstar did not converge in {max_iter} "
+                "rounds — raise max_iter (expected O(log n) rounds)"
+            )
     labels = p.select(F.col("a").alias("node"), F.col("b").alias("component"))
     return (
         vertices.join(labels, "node", "left")

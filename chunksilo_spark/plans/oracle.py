@@ -27,7 +27,7 @@ from ..functions.triples import (
     normalize_surface,
 )
 from ..functions.extract import extract_text
-from ..operators.canon import JACCARD_THRESHOLD
+from ..operators.canon import JACCARD_THRESHOLD, union_find_min
 from ..operators.stage2_link import LINK_THRESHOLD
 from ..sources.corpus import build_entity_pool, golden_pages
 
@@ -40,29 +40,21 @@ def oracle_canon_map(norms: set[str], threshold: float = JACCARD_THRESHOLD):
     for n in norms_l:
         for bk in band_keys(minhash_signature(n.split())):
             buckets[bk].append(idx[n])
-    parent = list(range(len(norms_l)))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
     wsets = [set(n.split()) for n in norms_l]
     seen = set()
+    verified = []
     for bucket in buckets.values():
         for i, j in itertools.combinations(sorted(set(bucket)), 2):
             if (i, j) in seen:
                 continue
             seen.add((i, j))
             if jaccard(wsets[i], wsets[j]) >= threshold:
-                ri, rj = find(i), find(j)
-                if ri != rj:
-                    parent[max(ri, rj)] = min(ri, rj)
+                verified.append((i, j))
+    roots = union_find_min(verified)
 
     comp_members = defaultdict(list)
     for i, n in enumerate(norms_l):
-        comp_members[find(i)].append(n)
+        comp_members[roots.get(i, i)].append(n)
     out = {}
     for members in comp_members.values():
         canon_surface = min(members)

@@ -268,9 +268,10 @@ CAPTURE = [
     ("g_degree_topk", "in-degree hubs: one map-side-combinable count "
      "agg + TakeOrderedAndProject — no rank window over the node "
      "universe"),
-    ("g_components", "iterative min-label CC: per round one edges-labels "
-     "equi-join + map-side min; the returned labeling reads from the "
-     "final round's lineage cut (plan depth O(1) in iterations)"),
+    ("g_components", "CC below the size threshold: the edge set is cut "
+     "once and collected; the driver union-find's labels come back as a "
+     "LocalRelation left-joined onto the vertex set (no per-round "
+     "joins)"),
     ("g_two_hop", "2-hop reach: two edge equi-joins through the mid "
      "node with an early DISTINCT between hops (multi-path collapse "
      "BEFORE the second fan-out); per-source counts aggregate "

@@ -320,24 +320,29 @@ class TestHubSkew:
 
 
 class TestComponentsStrict:
-    # path graph 0-1-2-...-6: diameter 6, so max_iter=1 (2 hops) cannot
-    # converge — strict mode must raise instead of silently returning
-    # split components (the long-chain dedup hazard)
+    # path graph 0-1-2-...-6: star-star with max_iter=1 cannot converge
+    # and must raise instead of silently returning split components (the
+    # long-chain dedup hazard); it reaches the fixpoint in round 3, so
+    # max_iter 3 and 4 end there and must not raise
     CHAIN = [(i, i + 1) for i in range(6)]
+
+    @staticmethod
+    def cc(edges, max_iter):
+        return G.components_starstar(edges, max_iter=max_iter)
 
     def test_strict_raises_on_non_convergence(self, spark):
         edges = spark.createDataFrame(self.CHAIN, "src long, dst long")
         with pytest.raises(Exception, match="did not converge"):
-            G.weak_components(edges, max_iter=1, strict=True).collect()
+            self.cc(edges, max_iter=1).collect()
 
     def test_boundary_convergence_is_not_a_false_positive(self, spark):
-        # diameter 6, max_iter=3 (exactly ceil(diameter/2)): labels converge
-        # IN the final round, so the in-loop change check still reads
-        # changed > 0 — the single-hop probe must accept, not raise
+        # the in-loop check compares states two rounds apart, so a
+        # fixpoint reached IN the final round still reads as changed —
+        # the one-round probe must accept, not raise
         edges = spark.createDataFrame(self.CHAIN, "src long, dst long")
         got = {
             r["node"]: r["component"]
-            for r in G.weak_components(edges, max_iter=3, strict=True).collect()
+            for r in self.cc(edges, max_iter=3).collect()
         }
         assert got == {i: 0 for i in range(7)}
 
@@ -345,9 +350,24 @@ class TestComponentsStrict:
         edges = spark.createDataFrame(self.CHAIN, "src long, dst long")
         got = {
             r["node"]: r["component"]
-            for r in G.weak_components(edges, max_iter=4, strict=True).collect()
+            for r in self.cc(edges, max_iter=4).collect()
         }
         assert got == {i: 0 for i in range(7)}
+
+
+class TestComponentsStrictViaWeakComponents(TestComponentsStrict):
+    """The same cases through the package's CC entry on its star-star
+    side: ``max_iter`` reaches star-star and non-convergence raises."""
+
+    @pytest.fixture(autouse=True)
+    def _star_star_side(self, monkeypatch):
+        from chunksilo_spark.operators import canon
+
+        monkeypatch.setattr(canon, "SMALL_GRAPH_THRESHOLD", 0)
+
+    @staticmethod
+    def cc(edges, max_iter):
+        return G.weak_components(edges, max_iter=max_iter)
 
 
 class TestCorpusLinkGraph:
@@ -480,9 +500,10 @@ class TestWeakComponents:
 
 
 class TestStarStarComponents:
-    def test_parity_with_min_label_on_crawl(self, spark):
+    def test_parity_with_weak_components_on_crawl(self, spark):
         """Star-star CC must produce the identical (node, min-id)
-        labeling as the min-label operator on the corpus link graph."""
+        labeling as weak_components (the driver union-find at this size)
+        on the corpus link graph."""
         import pyspark.sql.functions as F
 
         from chunksilo_spark.sources.corpus import pages_df
@@ -502,13 +523,13 @@ class TestStarStarComponents:
         assert len(set(got.values())) > 1
 
     def test_long_chain_converges_in_log_rounds(self, spark):
-        """A 200-node path has diameter 199 — min-label needs ~100
-        rounds; star-star must finish inside its default O(log n)
-        budget (16) and label everything with the chain min."""
+        """A 200-node path has diameter 199 — two-hop label propagation
+        would need ~100 rounds; star-star must finish inside its default
+        O(log n) budget (16) and label everything with the chain min."""
         edges = spark.createDataFrame(
             [(i, i - 1) for i in range(1, 200)], "src long, dst long"
         )
-        got = G.components_starstar(edges, max_iter=16, strict=True)
+        got = G.components_starstar(edges, max_iter=16)
         assert {r["component"] for r in got.collect()} == {0}
         assert got.count() == 200
 
@@ -529,7 +550,7 @@ class TestStarStarComponents:
             [(i, i - 1) for i in range(1, 64)], "src long, dst long"
         )
         with pytest.raises(RuntimeError):
-            G.components_starstar(edges, max_iter=1, strict=True)
+            G.components_starstar(edges, max_iter=1)
 
 
 class TestStreamingLinkGraph:
