@@ -879,10 +879,8 @@ def _kg_pipeline_mini(spark, sf):  # end-to-end KG DAG (rows-only)
     from chunksilo_spark.operators import stage1_extract as s1
     from chunksilo_spark.operators import stage2_link as s2
     from chunksilo_spark.operators import stage3_triples as s3
-    from chunksilo_spark.operators.canon import canon_map
+    from chunksilo_spark.operators.canon import canon_map, normalize_column
     from chunksilo_spark.sources.corpus import aliases_df, pages_df
-    from chunksilo_spark.functions.triples import normalize_surface
-    import pandas as pd
 
     pages = pages_df(spark, 100, partitions=8)
     aliases = aliases_df(spark)
@@ -891,17 +889,10 @@ def _kg_pipeline_mini(spark, sf):  # end-to-end KG DAG (rows-only)
     linked = s2.detect_and_link(documents, alias_bc)
     raw = s3.extract_raw_triples(documents)
 
-    def norm_batch(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"norm": [normalize_surface(s) for s in pdf["s"]]})
-
-    surfaces = (
-        aliases.select(F.col("alias").alias("s"))
-        .unionByName(linked.select(F.col("surface").alias("s")))
-        .distinct()
-        .mapInPandas(norm_batch, schema="norm string")
-        .distinct()
+    surfaces = aliases.select(F.col("alias").alias("s")).unionByName(
+        linked.select(F.col("surface").alias("s"))
     )
+    surfaces = normalize_column(surfaces.distinct(), "s").distinct()
     canon = canon_map(surfaces)
     triples = s3.canonical_triples(raw, s3.linked_surfaces(linked), canon)
     return (

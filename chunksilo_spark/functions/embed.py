@@ -11,7 +11,7 @@ exactly reproducible with no model downloads.
 the tokenize loop, which is the semantic definition itself).
 
 A real model would slot in behind the same (texts)->ndarray interface; the
-per-executor-process model cache pattern lives in operators/stage2_link.py.
+per-executor-process model cache lives in models.py.
 """
 
 from __future__ import annotations

@@ -8,11 +8,15 @@ only linked surface triples (~20x smaller than documents). Canonicalization
 then runs over the distinct normalized surfaces of this output and the final
 canon rewrite is a broadcast join.
 
-Semantics are EXACTLY the composed path (tested equivalent): a triple is
-kept iff both its subject and object surfaces link (cosine top-1 >= the
-stage-2 threshold against the broadcast alias dictionary). Linking a surface
-is decided per-surface, so linking only triple-participating surfaces equals
-linking all mentions first.
+Semantics are EXACTLY the composed path, because the kernels are shared,
+not copied: each page goes through stage 1's ``decode_page`` (size cap,
+deadline, format routing, strict UTF-8 decode — a page stage 1 would
+quarantine is skipped here) and each surface through stage 2's
+``link_surfaces`` (cosine top-1 against the broadcast alias dictionary,
+kept at ``score >= LINK_THRESHOLD``). A triple is kept iff both its subject
+and object surfaces link. Linking a surface is decided per-surface, so
+linking only triple-participating surfaces equals linking all mentions
+first (tested equivalent).
 """
 
 from __future__ import annotations
@@ -24,52 +28,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.embed import cosine_topk, normalize_rows
-from ..functions.extract import extract_text
 from ..functions.triples import extract_triples_from_text, normalize_surface
 from ..models import DEFAULT_EMBEDDER, ModelSpec
-from .stage2_link import LINK_THRESHOLD
+from .stage1_extract import decode_page
+from .stage2_link import LINK_THRESHOLD, link_surfaces
 
 FUSED_SCHEMA = (
     "url string, subj_surface string, pred string, obj_surface string, "
     "char_pos long, subj_norm string, obj_norm string"
 )
 
-# Per-worker surface->linked cache (optimization guide §4.5: this module
-# is importable on executors, so the global survives across tasks under
-# spark.python.worker.reuse). Linking a surface is a pure function of
-# (alias matrix, embedder, threshold) — the cache key — and the surface
-# universe is dictionary-sized while the corpus is not, so after the
-# first few batches every batch's embed + matmul collapses to lookups.
-# Bounded so an adversarial surface stream cannot grow it unboundedly.
-_LINK_CACHE: dict = {}
-_LINK_CACHE_MAX = 2_000_000
-# matrix identity must be CONTENT-based: a worker can outlive a job, and
-# id(mat) alone could be recycled by a different alias matrix allocated
-# at the same address after the old broadcast is GC'd — stale links with
-# no error. The digest memo holds a strong reference to the matrix it
-# hashed, so a live memo entry's id cannot be reused by another object
-# and the `is` check makes the id lookup exact.
-_MAT_DIGESTS: dict = {}
-
-
-def _mat_digest(mat) -> str:
-    entry = _MAT_DIGESTS.get(id(mat))
-    if entry is not None and entry[0] is mat:
-        return entry[1]
-    import hashlib
-
-    d = hashlib.md5(mat.tobytes()).hexdigest()
-    if len(_MAT_DIGESTS) > 16:
-        _MAT_DIGESTS.clear()
-    _MAT_DIGESTS[id(mat)] = (mat, d)
-    return d
-
 
 def fused_linked_triples(
     pages: DataFrame,
     alias_bc,
-    threshold: float = LINK_THRESHOLD,
     embedder: ModelSpec | None = None,
 ) -> DataFrame:
     """pages (url, html, lang) -> linked surface triples, one Arrow pass.
@@ -82,15 +54,7 @@ def fused_linked_triples(
     pages = pages.where(F.col("lang") == F.lit("en"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _aid, _astr, _eid, mat = alias_bc.value
-        if mat.shape[0] == 0:  # empty dictionary: zero links, not a crash
-            return
-        model = spec.resolve()  # one construction per worker process
-        cache_key = (_mat_digest(mat), float(threshold), spec.key)
-        cache = _LINK_CACHE.setdefault(cache_key, {})
-        if len(_LINK_CACHE) > 8:  # stale broadcasts from finished jobs
-            _LINK_CACHE.clear()
-            cache = _LINK_CACHE.setdefault(cache_key, {})
+        mat = alias_bc.value[3]
         for pdf in batches:
             rows = {k: [] for k in (
                 "url", "subj_surface", "pred", "obj_surface", "char_pos",
@@ -98,10 +62,9 @@ def fused_linked_triples(
             for url, html, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
                 if lang != "en":
                     continue
-                try:
-                    text = extract_text(bytes(html).decode("utf-8", "strict"))
-                except Exception:
-                    continue  # quarantine path (tracked by the staged mode)
+                text, _, err = decode_page(bytes(html))
+                if err is not None:
+                    continue
                 for subj, pred, obj, pos in extract_triples_from_text(text):
                     rows["url"].append(url)
                     rows["subj_surface"].append(subj)
@@ -114,24 +77,8 @@ def fused_linked_triples(
                 rows["subj_surface"] + rows["obj_surface"], dtype=object
             )
             uniq, inv = np.unique(surf, return_inverse=True)
-            linked_u = np.empty(len(uniq), dtype=bool)
-            miss_pos = []
-            for i, s in enumerate(uniq):
-                dec = cache.get(s)
-                if dec is None:
-                    miss_pos.append(i)
-                else:
-                    linked_u[i] = dec
-            if miss_pos:
-                miss = [uniq[i] for i in miss_pos]
-                q = normalize_rows(model.embed(miss))
-                _idx, scores = cosine_topk(q, mat, k=1)
-                decided = scores[:, 0] >= threshold
-                for p, s, dec in zip(miss_pos, miss, decided):
-                    linked_u[p] = dec
-                    if len(cache) < _LINK_CACHE_MAX:
-                        cache[s] = bool(dec)
-            linked = linked_u[inv]
+            _idx, scores = link_surfaces(uniq, mat, spec)
+            linked = (scores >= LINK_THRESHOLD)[inv]
             n = len(rows["url"])
             keep = linked[:n] & linked[n:]
             if not keep.any():

@@ -101,6 +101,50 @@ def _row_deadline(seconds: float):
     return cm()
 
 
+def decode_page(
+    raw: bytes,
+    max_html_bytes: int = MAX_HTML_BYTES,
+    row_timeout_s: float = ROW_TIMEOUT_S,
+    decoder=None,
+    derive=None,
+):
+    """One page's bytes -> ``(text, derive(text), None)``, or
+    ``("", None, error)`` for a page that quarantines.
+
+    The single page decoder of every dataflow (staged extract, fused pass):
+    size cap, then under one per-row deadline format routing and the strict
+    UTF-8 decode into ``extract_text`` — plus ``derive``, so work on the
+    text (headings, line offsets) shares the same deadline. Binary document
+    formats go to ``decoder`` (a resolved binary decoder, see
+    functions/docformats.py); with none they quarantine (convert-or-skip,
+    never kill the job)."""
+    from ..functions.docformats import detect_format
+
+    try:
+        if len(raw) > max_html_bytes:
+            raise ValueError(
+                f"html too large: {len(raw)} > {max_html_bytes} bytes"
+            )
+        with _row_deadline(row_timeout_s):
+            fmt = detect_format(raw)
+            if fmt == "html":
+                text = extract_text(raw.decode("utf-8", errors="strict"))
+            elif decoder is not None:
+                text = decoder.decode(fmt, raw)
+            else:
+                raise ValueError(f"unsupported format: {fmt}")
+            return text, (derive(text) if derive else None), None
+    except _RowTimeout:  # hung row -> quarantine, batch continues
+        return "", None, f"timeout: row exceeded {row_timeout_s}s"
+    except Exception as e:  # quarantine, never fail the task
+        return "", None, f"{type(e).__name__}: {e}"
+
+
+def _layout(text: str):
+    heads = [(h["text"], h["position"], h["level"]) for h in extract_headings(text)]
+    return heads, line_offsets(text)
+
+
 def _extract_batch(
     batches: Iterator[pd.DataFrame],
     max_html_bytes: int = MAX_HTML_BYTES,
@@ -108,8 +152,6 @@ def _extract_batch(
     binary_decoder=None,
 ) -> Iterator[pd.DataFrame]:
     import hashlib
-
-    from ..functions.docformats import detect_format
 
     decoder = binary_decoder.resolve() if binary_decoder is not None else None
 
@@ -127,36 +169,10 @@ def _extract_batch(
             pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"], in_extras
         ):
             raw = bytes(html)
-            text, heads, offs, ok, err = "", [], [], True, None
-            try:
-                if len(raw) > max_html_bytes:
-                    raise ValueError(
-                        f"html too large: {len(raw)} > {max_html_bytes} bytes"
-                    )
-                with _row_deadline(row_timeout_s):
-                    # format routing (S7-S9): binary document formats go to
-                    # the pluggable decoder; with none configured they
-                    # quarantine (convert-or-skip, never kill the job)
-                    fmt = detect_format(raw)
-                    if fmt == "html":
-                        text = extract_text(
-                            raw.decode("utf-8", errors="strict")
-                        )
-                    elif decoder is not None:
-                        text = decoder.decode(fmt, raw)
-                    else:
-                        raise ValueError(f"unsupported format: {fmt}")
-                    heads = [
-                        (h["text"], h["position"], h["level"])
-                        for h in extract_headings(text)
-                    ]
-                    offs = line_offsets(text)
-            except _RowTimeout:  # hung row -> quarantine, batch continues
-                ok, err = False, f"timeout: row exceeded {row_timeout_s}s"
-                text, heads, offs = "", [], []
-            except Exception as e:  # quarantine, never fail the task
-                ok, err = False, f"{type(e).__name__}: {e}"
-                text, heads, offs = "", [], []
+            text, layout, err = decode_page(
+                raw, max_html_bytes, row_timeout_s, decoder, _layout
+            )
+            heads, offs = layout if err is None else ([], [])
             out["url"].append(url)
             out["warc_ts"].append(ts)
             out["lang"].append(lang)
@@ -168,7 +184,7 @@ def _extract_batch(
             out["headings"].append(heads)
             out["line_offsets"].append(offs)
             out["n_chars"].append(len(text))
-            out["ok"].append(ok)
+            out["ok"].append(err is None)
             out["error"].append(err)
             # source keys first, engine-derived keys layered on top
             extras = dict(page_extras) if page_extras is not None else {}

@@ -194,23 +194,10 @@ def run_pipeline(
 
 def _canon_from_linked(aliases: DataFrame, linked: DataFrame) -> DataFrame:
     """canon_map over dictionary aliases ∪ linked mention surfaces."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from ..functions.triples import normalize_surface
-
-    def norm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({"norm": [normalize_surface(s) for s in pdf["s"]]})
-
-    surfaces = (
-        aliases.select(F.col("alias").alias("s"))
-        .unionByName(linked.select(F.col("surface").alias("s")))
-        .distinct()
-        .mapInPandas(norm_batch, schema="norm string")
-        .distinct()
+    surfaces = aliases.select(F.col("alias").alias("s")).unionByName(
+        linked.select(F.col("surface").alias("s"))
     )
+    surfaces = canon_ops.normalize_column(surfaces.distinct(), "s").distinct()
     return canon_ops.canon_map(surfaces)
 
 

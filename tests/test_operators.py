@@ -829,6 +829,7 @@ class TestReviewRegressions:
         assert fused_linked_triples(pages, bc).count() == 0
         docs = s1.extract_documents(pages, partitions=2)
         assert s2.link_mentions(s2.detect_mentions(docs), bc).count() == 0
+        assert s2.detect_and_link(docs, bc).count() == 0
 
 
 class TestMeanPooledEmbeddings:
