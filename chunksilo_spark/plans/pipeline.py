@@ -1,8 +1,13 @@
 """The extract -> link -> canonicalize -> materialize DAG with
 checkpointed, resumable stage boundaries (north-star stage 4).
 
-Each stage writes its output table + per-partition lineage rows, then marks
-the stage complete in the store manifest keyed by an input fingerprint.
+Each stage writes its output table, reads it back with the schema in its
+own footer, replaces the table's lineage file with one row per written file
+(from the footers, plans/lineage.py), then marks the stage complete in the
+store manifest keyed by an input fingerprint. Everything after the write is
+driver-side metadata: a stage costs its own Spark jobs and no bookkeeping
+jobs.
+
 A resumed run (same fingerprint) reads the materialized table instead of
 recomputing — the reference's "run again to continue" semantics
 (index.py:1681-1696) at stage granularity. Killing the job between stages
@@ -20,6 +25,7 @@ Stage graph:
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +37,49 @@ from ..operators import stage1_extract as s1
 from ..operators import stage2_link as s2
 from ..operators import stage3_triples as s3
 from ..sources.storage import TableStore
-from .lineage import partition_lineage
+from .lineage import LINEAGE_SCHEMA, record_lineage
+
+
+# the key column each table's lineage rows bound: run_pipeline hands the same
+# to _materialize; apply_increment and _convert_legacy_lineage look it up here
+_LINEAGE_KEYS = {
+    "documents": "url", "chunks": "url", "quarantine": "url",
+    "mentions": "url", "linked_mentions": "url", "raw_triples": "url",
+    "canon_map": "norm", "triples": "url", "nodes": "canon_id",
+    "edges": "subj_canon_id", "outlinks": "url", "web_edges": "src",
+    "web_rank": "node", "web_anchors": "url", "web_aliases": "dst",
+}
+
+
+def _convert_legacy_lineage(store: TableStore) -> None:
+    """Convert a lineage directory written before lineage came from the
+    footers. Its Spark-appended ``part-*`` files hold the build's rows
+    (stale after a refresh, doubled after a rebuild) and nothing else
+    replaces them. Every table the manifest names gets its lineage file from
+    its footers, under the stage that last wrote it; then the old files
+    (with ``_SUCCESS`` and the ``.crc`` files) are deleted. Driver-only; a
+    no-op on a directory without them."""
+    lineage_dir = store.path("lineage")
+    try:
+        old = [n for n in os.listdir(lineage_dir)
+               if n.lstrip(".").startswith(("part-", "_SUCCESS"))]
+    except FileNotFoundError:
+        return
+    if not old:
+        return
+    writer = {}  # table -> the stage that wrote it last
+    stages = store.manifest()["stages"]
+    for stage, entry in sorted(
+        stages.items(), key=lambda kv: kv[1].get("completed_at", 0)
+    ):
+        if entry.get("table") in _LINEAGE_KEYS:
+            writer[entry["table"]] = stage
+    for table, stage in writer.items():
+        if os.path.isdir(store.path(table)):
+            record_lineage(store.path(table), lineage_dir, table, stage,
+                           _LINEAGE_KEYS[table])
+    for name in old:
+        os.remove(os.path.join(lineage_dir, name))
 
 
 def _materialize(
@@ -44,7 +92,10 @@ def _materialize(
     key_col: str,
     resume: bool = True,
 ) -> DataFrame:
-    """Run one resumable stage: build -> write table + lineage -> mark."""
+    """Run one resumable stage: build -> write table -> read it back ->
+    lineage -> mark. Only ``build`` and the write run Spark jobs: the
+    read-back takes its schema from the footer (``TableStore.read``) and
+    the lineage rows come from the footers (``record_lineage``)."""
     if (
         resume
         and store.stage_complete(stage, fingerprint)
@@ -55,8 +106,9 @@ def _materialize(
     df = build()
     store.write(df, table)
     out = store.read(spark, table)
-    lineage = partition_lineage(out, stage, key_col)
-    lineage.write.mode("append").parquet(store.path("lineage"))
+    record_lineage(
+        store.path(table), store.path("lineage"), table, stage, key_col
+    )
     store.mark_complete(
         stage, fingerprint, table=table, wall_s=round(time.time() - t0, 3)
     )
@@ -88,6 +140,7 @@ def run_pipeline(
     ``web_aliases`` (top-k anchor texts per target url — GLOBAL rollup of
     web_anchors, the corpus-derived alias-candidate dictionary)."""
     store = TableStore(out_dir)
+    _convert_legacy_lineage(store)
 
     documents = _materialize(
         store, spark, "stage1_extract", "documents", fingerprint,
@@ -188,7 +241,9 @@ def run_pipeline(
             lambda: _build_web_aliases(web_anchors), "dst", resume,
         )
 
-    out["lineage"] = spark.read.parquet(store.path("lineage"))
+    out["lineage"] = spark.read.schema(LINEAGE_SCHEMA).parquet(
+        store.path("lineage")
+    )
     return out
 
 
@@ -230,6 +285,10 @@ def apply_increment(
          recomputing it from the dictionary-sized surface set is the correct
          and cheap choice at any scale.
 
+    Every replaced table's lineage file is rewritten from its new footers
+    under stage ``incr_<table>`` (the manifest's name for the step), so
+    lineage describes the refreshed tables, not the build's.
+
     The result is equal to running the full pipeline from scratch on the new
     snapshot (tested row-for-row in tests/test_incremental.py).
 
@@ -242,6 +301,7 @@ def apply_increment(
     from ..operators.retrieval import chunks_with_embeddings
 
     store = TableStore(out_dir)
+    _convert_legacy_lineage(store)
     old_docs = store.read(spark, "documents")
     snap = incr.with_content_hash(new_pages)
     log = incr.change_log(
@@ -336,6 +396,8 @@ def apply_increment(
         # side dir first, so the old contents feeding the plans stay readable)
         for name, df in row_level:
             store.replace(df, name)
+            record_lineage(store.path(name), store.path("lineage"), name,
+                           f"incr_{name}", _LINEAGE_KEYS[name])
             store.mark_complete(f"incr_{name}", fingerprint, table=name)
     finally:
         # every consumer has materialized by the last replace(); without this
@@ -368,6 +430,8 @@ def apply_increment(
         store.replace(_build_web_aliases(anchors_v2), "web_aliases")
         global_tables += ["web_edges", "web_rank", "web_aliases"]
     for name in global_tables:
+        record_lineage(store.path(name), store.path("lineage"), name,
+                       f"incr_{name}", _LINEAGE_KEYS[name])
         store.mark_complete(f"incr_{name}", fingerprint, table=name)
 
     names = [

@@ -19,6 +19,40 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# where Spark's parquet writer keeps the table's own schema (as StructType
+# JSON) in each file's footer key-value metadata
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def part_files(table_dir: str) -> list[str]:
+    """The data files directly inside a parquet table directory, sorted.
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files,
+    temporaries) are not data, by Spark's own rule."""
+    try:
+        names = os.listdir(table_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        os.path.join(table_dir, n)
+        for n in names
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    )
+
+
+def footer_schema(table_dir: str) -> StructType | None:
+    """The Spark schema recorded in the first data file's footer, read on
+    the driver with pyarrow; None when there is no such file (a directory
+    partitioned into subdirectories) or no such key (a file Spark did not
+    write)."""
+    files = part_files(table_dir)
+    if not files:
+        return None
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_metadata(files[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(raw)) if raw else None
 
 
 class TableStore:
@@ -157,10 +191,17 @@ class TableStore:
                 os.replace(old, final)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """The table as a DataFrame. A parquet table is read with the schema
+        in its own footer (``footer_schema``), so the read plans without a
+        schema-inference job; without one, Spark infers the schema as
+        usual."""
         if self.table_format == "iceberg":
             return spark.read.table(table)
         self._heal(table)
-        return spark.read.parquet(self.path(table))
+        path = self.path(table)
+        schema = footer_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
 
     def exists(self, table: str, spark: SparkSession | None = None) -> bool:
         if self.table_format == "iceberg":

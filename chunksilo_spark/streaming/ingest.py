@@ -10,11 +10,13 @@ continuous materialization instead of scheduled batches:
     is source-agnostic;
   * transform: the SAME extract_documents mapInPandas kernel (byte-identity
     invariant holds per micro-batch);
-  * sink: foreachBatch writes documents + lineage into a ``batch_id=N``
-    partition with dynamic partition OVERWRITE — foreachBatch is only
-    at-least-once, so a replayed batch must land idempotently (re-running
-    batch N rewrites partition N instead of appending duplicates); the
-    checkpoint offset log then upgrades this to effective exactly-once.
+  * sink: foreachBatch writes documents into a ``batch_id=N`` partition
+    with dynamic partition OVERWRITE — foreachBatch is only at-least-once,
+    so a replayed batch must land idempotently (re-running batch N rewrites
+    partition N instead of appending duplicates); the checkpoint offset log
+    then upgrades this to effective exactly-once. The batch's lineage rows
+    come from the footers of the files it wrote (plans/lineage.py) into
+    ``lineage/batch_id=N/documents.parquet``, replaced the same way.
 
 Watermarks/event-time windows are intentionally absent: warc_ts only
 partitions data (the reference has no event-time semantics to preserve).
@@ -25,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.stage1_extract import extract_documents
-from ..plans.lineage import partition_lineage
+from ..plans.lineage import record_lineage
 
 
 def stream_pages(
@@ -59,27 +61,21 @@ def start_ingest(
     from pyspark.sql import functions as F
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        docs = extract_documents(batch_df, partitions=8)
-        docs.persist()
-        try:
-            # idempotent: a replayed batch OVERWRITES its own partition
-            (
-                docs.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/documents")
-            )
-            (
-                partition_lineage(docs, f"stream_batch_{batch_id}", "url")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/lineage")
-            )
-        finally:
-            docs.unpersist()
+        # idempotent: a replayed batch OVERWRITES its own partition
+        (
+            extract_documents(batch_df, partitions=8)
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(f"{out_dir}/documents")
+        )
+        # the batch's files sit directly in its partition directory
+        record_lineage(
+            f"{out_dir}/documents/batch_id={batch_id}",
+            f"{out_dir}/lineage/batch_id={batch_id}",
+            "documents", f"stream_batch_{batch_id}", "url",
+        )
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -10,6 +10,28 @@ from chunksilo_spark.operators import stage1_extract as s1
 from chunksilo_spark.sources.corpus import pages_df
 
 
+ROW_LEVEL_AND_GLOBAL = (
+    "documents", "chunks", "quarantine", "mentions", "linked_mentions",
+    "raw_triples", "canon_map", "triples", "nodes", "edges",
+)
+
+
+def _assert_lineage_is_current(spark, out_dir):
+    """After a refresh each table's lineage file describes the refreshed
+    table: its rows are stage ``incr_<table>`` and their n_rows sum to the
+    table's row count."""
+    import pyarrow.parquet as pq
+
+    from chunksilo_spark.sources.storage import TableStore
+
+    store = TableStore(out_dir)
+    for table in ROW_LEVEL_AND_GLOBAL:
+        lin = pq.read_table(f"{out_dir}/lineage/{table}.parquet").to_pylist()
+        assert {r["stage"] for r in lin} <= {f"incr_{table}"}, table
+        n = sum(r["n_rows"] for r in lin)
+        assert n == store.read(spark, table).count(), table
+
+
 def _snapshots(spark):
     """snapshot1 = pages 0..199; snapshot2 = drop 3% (deleted), modify 5%
     (html perturbed), add 5% new (ids 200..209)."""
@@ -136,6 +158,7 @@ class TestApplyIncrement:
         for table, cols in checks.items():
             c = cols or sorted(want[table].columns)
             assert rows(got[table], c) == rows(want[table], c), table
+        _assert_lineage_is_current(spark, incr_dir)
 
     def test_apply_after_kill_is_rerunnable(self, spark, tmp_path):
         """Killing between the row-level swap and the global rebuild, then
@@ -271,3 +294,4 @@ class TestStreamingMaintenance:
             )
             b = sorted((tuple(r) for r in want[table].collect()), key=repr)
             assert a == b, table
+        _assert_lineage_is_current(spark, tables_dir)

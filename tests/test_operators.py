@@ -738,6 +738,19 @@ class TestStreamingIngest:
         )
         assert got == want
 
+        # one lineage file per batch, from the footers of the batch's files
+        lineage = spark.read.parquet(f"{out}/lineage")
+        per_batch = {
+            r["batch_id"]: r["n"]
+            for r in stream_docs.groupBy("batch_id").count()
+            .withColumnRenamed("count", "n").collect()
+        }
+        assert {
+            r["batch_id"]: (r["stage"], r["n"])
+            for r in lineage.groupBy("batch_id", "stage")
+            .agg(F.sum("n_rows").alias("n")).collect()
+        } == {b: (f"stream_batch_{b}", n) for b, n in per_batch.items()}
+
     def test_replayed_batch_is_idempotent(self, spark, tmp_path):
         """foreachBatch is at-least-once: re-delivering the same batches
         (fresh checkpoint, same source and sink) must OVERWRITE the
@@ -760,6 +773,8 @@ class TestStreamingIngest:
         q.awaitTermination(120)
         n2 = spark.read.parquet(f"{out}/documents").count()
         assert n1 == n2 == 30
+        lineage = spark.read.parquet(f"{out}/lineage")
+        assert lineage.agg(F.sum("n_rows")).first()[0] == 30
 
 
 class TestRerank:
