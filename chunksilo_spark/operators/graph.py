@@ -12,22 +12,35 @@ Scale shape (the 100 TB answer, per operator):
     (``resolve_href_col`` — the exact twin of ``functions/urls.resolve_href``,
     see that module's pinned semantics). No Python per row, no shuffle
     except the final per-page dedup (``explode`` is map-side).
-  * ``pagerank`` — the iterative-DataFrame-join pattern: each iteration is
-    one equi-join of the (pre-joined, checkpointed) edge+degree relation
-    with the current ranks, then a map-side-combined sum by dst. Hub skew
-    (the corpus has 30%-frequency hubs) is AQE skew-join territory; lineage
-    is truncated via ``checkpointing.cut_lineage`` every iteration so plans
+  * ``pagerank`` / ``personalized_pagerank`` — the iterative-DataFrame-join
+    pattern, ONE walk loop (``_walk``) with a per-entry rank update: each
+    round is one equi-join of the (pre-joined, cut) edge+degree relation
+    with the current ranks, then ONE map-side-combined sum by dst that
+    also zero-fills and carries each node's dangling flag and teleport
+    share. Hub skew (the corpus has 30%-frequency hubs) is AQE skew-join
+    territory; lineage is truncated via ``checkpointing.cut_lineage``
+    (every round when a node dangles, else every second round) so plans
     stay O(1) deep regardless of iteration count — ``localCheckpoint`` by
     default, reliable ``checkpoint`` when a checkpoint dir is configured
     (``checkpointing.use_reliable_checkpoints``, the production mode: a
     lost executor makes localCheckpoint-truncated lineage unrecoverable).
-    Dangling mass is a
-    one-scalar aggregate per iteration, never a corpus-sized collect.
+    Dangling mass is a one-scalar aggregate per iteration, never a
+    corpus-sized collect.
+  * ``hyperball`` / ``hyperball_harmonic`` / ``hyperball_nf`` — ONE HLL
+    register loop (``_hyperball_states``) yields every radius's register
+    relation; the entries only finalize (the last radius, every radius,
+    or a per-radius sum).
+  * ``bfs_depths`` / ``approx_closeness`` / SCC's backward reach — ONE
+    level-synchronous frontier (``_bfs``), keyed by nothing, by the seed
+    or by the color class.
   * ``degree_topk`` / ``two_hop_counts`` — groupBy / self-join shapes that
     Catalyst already does right (partial aggregation; equi-join on dst=src).
 """
 
 from __future__ import annotations
+
+import sys
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -168,13 +181,112 @@ def degree_topk(
     )
 
 
+def _walk(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    weight_col: str | None,
+    iters: int,
+    start,
+    update,
+) -> DataFrame:
+    """The random-walk loop of :func:`pagerank` and
+    :func:`personalized_pagerank` -> (node, rank).
+
+    Edges with weight <= 0 (or null) are dropped first; unweighted edges
+    weigh 1.0, so ``inv_deg = w_uv / sum_u w`` is ``1/outdeg`` exactly (a
+    double sum of ones is an exact integer). The edge relation is
+    pre-joined with out-degrees ONCE and cut; the node relation carries
+    each node's static dangling flag ``_dg``. ``start(nodes, n)`` turns
+    the node relation into the rank-0 relation (node, rank, _dg, ...) or
+    returns None when there is nothing to walk; every column past
+    ``rank`` (the teleport share ``_reset`` of the personalized walk)
+    rides along unchanged. ``update(c, dang, n)`` is the entry's
+    rank-update expression over the summed contribution ``c`` and the
+    dangling mass ``dang`` (None when no node dangles).
+
+    Per-round plan shape (optimization round 6): contributions are
+    zero-filled by unioning a static (node, 0.0) relation into the ONE
+    contribution aggregation — the same sum (adding 0.0 is exact in
+    IEEE), no ``nodes LEFT JOIN contrib`` exchange. The carried columns
+    re-enter through the zero rows (contribution rows carry null, which
+    ``max`` ignores), so the dangling mass is a 1-row filter+agg on the
+    rank relation, broadcast-cross-joined into the update: it stays in
+    the plan, with no per-round driver collect and no semi-join.
+
+    Lineage is cut every round when a node dangles: the 1-row mass
+    aggregate is a broadcast-subquery stage, and against a lazy previous
+    round it races the contribution join into duplicate computation
+    (measured 2x slower on the bench link graph), while an eagerly
+    materialized round is read, not raced. Without dangling nodes the
+    rank relation has one consumer, so every second round and the last
+    are cut.
+    """
+    # materialize the edge relation ONCE: degrees, the contribution join
+    # and the node set all derive from it, and a live upstream plan (e.g.
+    # the outlink extraction regex) would otherwise recompute per consumer
+    w = F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
+    edges = cut_lineage(
+        edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
+            w.alias("_w"),
+        ).where(F.col("_w") > 0)
+    )
+    # contribution edges: (src, dst, w/W), built once, lineage cut; the
+    # SMJ build leaves it hash-partitioned AND sorted on src, which
+    # LogicalRDD preserves — so the per-round contribution join only
+    # exchanges/sorts the (node, rank) side
+    ed = cut_lineage(
+        edges.join(
+            edges.groupBy("src").agg(F.sum("_w").alias("_out_w")), "src"
+        ).select("src", "dst", (F.col("_w") / F.col("_out_w")).alias("inv_deg"))
+    )
+    # the node set with its dangling flag in ONE aggregation: a node
+    # dangles iff it never appears as a src (min(False, True) = False)
+    nodes = cut_lineage(
+        ed.select(F.col("src").alias("node"), F.lit(False).alias("_dg"))
+        .union(ed.select(F.col("dst").alias("node"), F.lit(True).alias("_dg")))
+        .groupBy("node")
+        .agg(F.min("_dg").alias("_dg"))
+    )
+    n, has_dangling = nodes.agg(F.count(F.lit(1)), F.max("_dg")).first()
+    ranks = start(nodes, n) if n else None
+    if ranks is None:
+        return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+    carry = ranks.columns[2:]
+    zeros = ranks.select("node", F.lit(0.0).alias("_c"), *carry)
+    for i in range(iters):
+        contrib = ed.join(ranks, ed["src"] == ranks["node"]).select(
+            F.col("dst").alias("node"),
+            (F.col("rank") * F.col("inv_deg")).alias("_c"),
+        )
+        # contribution rows carry null in the carried columns
+        agg = (
+            contrib.unionByName(zeros, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.sum("_c").alias("_c"), *[F.max(c).alias(c) for c in carry])
+        )
+        dang = None
+        if has_dangling:
+            agg = agg.crossJoin(F.broadcast(
+                ranks.where(F.col("_dg"))
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
+            ))
+            dang = F.col("_dang")
+        ranks = agg.select(
+            "node", update(F.col("_c"), dang, n).alias("rank"), *carry
+        )
+        if has_dangling or i % 2 == 1 or i == iters - 1:
+            ranks = cut_lineage(ranks)
+    return ranks.select("node", "rank")
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 10,
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 1,
     init_ranks: DataFrame | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -196,8 +308,7 @@ def pagerank(
     pass the ``support`` column so importance follows attestation.
     Edges with weight <= 0 (or null) are DROPPED before anything else:
     the node set is the kept edges' endpoints, and a node whose every
-    OUT-edge was dropped is dangling. Same plan shape — the degree
-    relation just carries a weighted sum.
+    OUT-edge was dropped is dangling.
 
     Semantics (the textbook formulation, pinned for the oracle):
       rank_0(v)    = 1/N
@@ -206,91 +317,17 @@ def pagerank(
     where dangling_t is the total rank mass on nodes with no out-edges
     (redistributed uniformly, so sum(rank) == 1 every iteration).
 
-    The edge relation is pre-joined with out-degrees ONCE and checkpointed;
-    each iteration shuffles only (node, rank) pairs. dangling_t stays IN
-    THE PLAN as a 1-row aggregate broadcast-cross-joined onto the rank
-    update (no per-iteration driver collect); with no dangling nodes the
-    subtree is omitted entirely.
-
-    Per-iteration plan shape (optimization round 6): the old
-    ``nodes LEFT JOIN contrib`` zero-fill is replaced by unioning a
-    static (node, 0.0) relation into the contribution aggregation — the
-    same sum (adding 0.0 is exact in IEEE), one exchange less per
-    iteration. The dangling flag rides ALONG in the rank relation (every
-    node's flag re-enters through the zero rows), so the dangling-mass
-    aggregate is a filter+agg on the rank relation instead of a per-
-    iteration semi-join. Rank relations are cached (lazy) between
-    lineage cuts so the two consumers of ``ranks`` (contribution join,
-    dangling aggregate) share one computation without forcing an eager
-    checkpoint job every iteration; cuts happen every
-    ``checkpoint_every`` rounds to bound plan depth.
+    The loop, its plan shape and its lineage cuts are :func:`_walk`'s,
+    shared with :func:`personalized_pagerank`; only the rank update is
+    this entry's.
     """
-    # materialize the edge relation ONCE: nodes, degrees and the contribution
-    # join all derive from it, and a live upstream plan (e.g. the outlink
-    # extraction regex) would otherwise recompute per consumer
-    if weight_col is None:
-        edges = cut_lineage(edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-            F.lit(1.0).alias("_w"),
-        ))
-    else:
-        edges = cut_lineage(
-            edges.select(
-                F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-                F.col(weight_col).cast("double").alias("_w"),
-            ).where(F.col("_w") > 0)
-        )
-    # unweighted: count (exact integers, bit-compatible with the pinned
-    # oracle); weighted: sum of weights — inv_deg = w_uv / W_u either way
-    if weight_col is None:
-        out_deg = edges.groupBy("src").agg(
-            F.count(F.lit(1)).alias("out_deg")
-        )
-        inv = F.lit(1.0) / F.col("out_deg")
-    else:
-        out_deg = edges.groupBy("src").agg(F.sum("_w").alias("out_deg"))
-        inv = F.col("_w") / F.col("out_deg")
-    # contribution edges: (src, dst, w/W), built once, lineage cut; the
-    # SMJ build leaves it hash-partitioned AND sorted on src, which
-    # LogicalRDD preserves — so the per-iteration contribution join only
-    # exchanges/sorts the (node, rank) side
-    ed = cut_lineage(edges.join(out_deg, "src").select(
-        "src", "dst", inv.alias("inv_deg")
-    ))
-    # node set with its static dangling flag in ONE relation
-    nodes_fl = cut_lineage(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(
-            ed.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("_has_out", F.lit(True)),
-            "node",
-            "left",
-        )
-        .select(
-            "node", (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("_dg")
-        )
-    )
-    n = nodes_fl.count()
-    if n == 0:
-        return nodes_fl.select("node", F.lit(0.0).alias("rank"))
-    has_dangling = nodes_fl.where(F.col("_dg")).limit(1).count() > 0
-    # static zero rows: every node contributes 0.0 (exact no-op in the
-    # sum) and re-injects its dangling flag each round
-    zeros = nodes_fl.select(
-        "node", F.lit(0.0).alias("_c"), F.col("_dg")
-    )
 
-    if init_ranks is None:
-        ranks = nodes_fl.select("node", F.lit(1.0 / n).alias("rank"), "_dg")
-    else:
-        ranks = cut_lineage(
-            nodes_fl.join(
-                init_ranks.select(
-                    F.col("node"), F.col("rank").alias("_init")
-                ),
+    def start(nodes: DataFrame, n: int) -> DataFrame:
+        if init_ranks is None:
+            return nodes.select("node", F.lit(1.0 / n).alias("rank"), "_dg")
+        return cut_lineage(
+            nodes.join(
+                init_ranks.select("node", F.col("rank").alias("_init")),
                 "node",
                 "left",
             ).select(
@@ -299,62 +336,16 @@ def pagerank(
                 "_dg",
             )
         )
-    cached: list[DataFrame] = []
-    for i in range(iters):
-        contrib = ed.join(ranks, ed["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"),
-            (F.col("rank") * F.col("inv_deg")).alias("_c"),
-            F.lit(None).cast("boolean").alias("_dg"),
-        )
-        # zero-fill via union into the SAME aggregation (one exchange):
-        # sum over {contributions} ∪ {0.0} == coalesce(sum, 0.0) exactly;
-        # max(_dg) recovers each node's flag from its zero row (contrib
-        # rows carry null, which max ignores)
-        agg = (
-            contrib.unionByName(zeros)
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_c"), F.max("_dg").alias("_dg"))
-        )
-        if has_dangling:
-            # 1-row dangling-mass aggregate over the flagged rank
-            # relation (no semi-join), broadcast-cross-joined so it stays
-            # in the plan. Float op ORDER mirrors the python/SQL oracles
-            # exactly: (1-d)/n precomputed, then (d * dang) / n.
-            dang = (
-                ranks.where(F.col("_dg"))
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-            )
-            agg = agg.crossJoin(F.broadcast(dang))
-            base_col = F.lit((1.0 - damping) / n) + (
-                F.lit(damping) * F.col("_dang")
-            ) / F.lit(float(n))
-        else:
-            base_col = F.lit((1.0 - damping) / n)
-        ranks = agg.select(
-            "node",
-            (base_col + F.lit(damping) * F.col("_c")).alias("rank"),
-            "_dg",
-        )
-        # lineage cut every ``checkpoint_every`` rounds; the default is 1
-        # (one eager job per iteration): with a dangling graph the 1-row
-        # mass aggregate is a broadcast-subquery stage, and against a
-        # merely lazy-cached previous iteration that stage races the
-        # contribution join into DUPLICATE computation (measured 2x
-        # slower at checkpoint_every=2 on the bench link graph. An
-        # eagerly materialized previous iteration is read, not raced.)
-        # Between cuts (checkpoint_every > 1) a lazy persist still keeps
-        # the two consumers from recomputing the full lineage.
-        if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-            ranks = cut_lineage(ranks)
-            for c in cached:
-                c.unpersist()
-            cached.clear()
-        else:
-            from pyspark import StorageLevel
 
-            ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-            cached.append(ranks)
-    return ranks.select("node", "rank")
+    def update(c: Column, dang: Column | None, n: int) -> Column:
+        # float op ORDER mirrors the python/SQL oracles exactly:
+        # ((1-d)/n precomputed + (d * dang) / n) + d * c
+        base = F.lit((1.0 - damping) / n)
+        if dang is not None:
+            base = base + (F.lit(damping) * dang) / F.lit(float(n))
+        return base + F.lit(damping) * c
+
+    return _walk(edges, src_col, dst_col, weight_col, iters, start, update)
 
 
 def personalized_pagerank(
@@ -374,19 +365,18 @@ def personalized_pagerank(
     interests) instead of uniformly, the standard KG relatedness /
     recommendation primitive.
 
-    Pinned semantics (the oracle unrolls them): ``reset(v)`` is the seed
-    weight normalized over seeds PRESENT IN THE GRAPH (others dropped);
-    ``rank_0 = reset``;
+    Pinned semantics (the oracle unrolls them): ``reset(v)`` is v's
+    summed seed weight (a node seeded twice counts once, with both
+    weights) normalized over seeds PRESENT IN THE GRAPH (others
+    dropped); ``rank_0 = reset``;
     ``rank_{t+1}(v) = (1-d)*reset(v) + d*contrib(v) + (d*dangling_t)*reset(v)``
     with exactly that term order, so dangling mass also teleports to the
     seeds. Non-seed sinks therefore leak nothing permanently; rank sums
     to 1 every iteration.
 
-    Same 100 TB shape as :func:`pagerank`: pre-joined checkpointed
-    edge+degree relation, per-iteration shuffle carries (node, rank)
-    only, dangling mass is a 1-row broadcast cross-join, lineage cut per
-    iteration. The reset column rides the node relation — one extra
-    double per node, no extra shuffle.
+    The loop is :func:`pagerank`'s (:func:`_walk`): the reset column
+    rides the node relation — one extra double per node, no extra
+    shuffle — and only the rank update differs.
 
     ``edge_weight_col`` weights the WALK (rank flows proportionally to
     edge weight, :func:`pagerank`'s ``weight_col`` semantics — weight
@@ -394,79 +384,76 @@ def personalized_pagerank(
     weights the SEEDS. Orthogonal knobs: evidence-weighted steps,
     interest-weighted teleports.
     """
-    if edge_weight_col is None:
-        edges = cut_lineage(edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-            F.lit(1.0).alias("_ew"),
-        ))
-    else:
-        edges = cut_lineage(
-            edges.select(
-                F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-                F.col(edge_weight_col).cast("double").alias("_ew"),
-            ).where(F.col("_ew") > 0)
-        )
-    nodes = cut_lineage(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    sd = seeds.select(
-        F.col(node_col).alias("node"),
-        F.col(weight_col).cast("double").alias("_w"),
-    ).join(nodes, "node", "left_semi")
-    w_total = sd.agg(F.sum("_w")).collect()[0][0]
-    if not w_total:
-        return nodes.withColumn("rank", F.lit(0.0)).limit(0)
-    nodes = cut_lineage(
-        nodes.join(sd, "node", "left").select(
-            "node",
-            F.coalesce(F.col("_w") / F.lit(float(w_total)), F.lit(0.0))
-            .alias("_reset"),
-        )
-    )
-    if edge_weight_col is None:
-        out_deg = edges.groupBy("src").agg(
-            F.count(F.lit(1)).alias("out_deg")
-        )
-        inv = F.lit(1.0) / F.col("out_deg")
-    else:
-        out_deg = edges.groupBy("src").agg(F.sum("_ew").alias("out_deg"))
-        inv = F.col("_ew") / F.col("out_deg")
-    ed = cut_lineage(edges.join(out_deg, "src").select(
-        "src", "dst", inv.alias("inv_deg")
-    ))
-    dangling_nodes = cut_lineage(nodes.join(
-        ed.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    ).select("node"))
-    has_dangling = dangling_nodes.limit(1).count() > 0
 
-    ranks = nodes.select("node", "_reset", F.col("_reset").alias("rank"))
-    for i in range(iters):
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("inv_deg")).alias("c"))
+    def start(nodes: DataFrame, n: int) -> DataFrame | None:
+        sd = (
+            seeds.groupBy(F.col(node_col).alias("node"))
+            .agg(F.sum(F.col(weight_col).cast("double")).alias("_w"))
+            .join(nodes, "node", "left_semi")
         )
-        new = nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-        rank_expr = F.lit(1.0 - damping) * F.col("_reset") + F.lit(
-            damping
-        ) * F.coalesce(F.col("c"), F.lit(0.0))
-        if has_dangling:
-            dang = (
-                ranks.join(dangling_nodes, "node", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
+        w_total = sd.agg(F.sum("_w")).first()[0]
+        if not w_total:
+            return None
+        reset = F.coalesce(F.col("_w") / F.lit(float(w_total)), F.lit(0.0))
+        return cut_lineage(
+            nodes.join(sd, "node", "left").select(
+                "node", reset.alias("rank"), "_dg", reset.alias("_reset")
             )
-            new = new.crossJoin(F.broadcast(dang))
-            rank_expr = rank_expr + (
-                F.lit(damping) * F.col("_dang")
-            ) * F.col("_reset")
-        ranks = new.select("node", "_reset", rank_expr.alias("rank"))
-        if has_dangling or (i + 1) % 2 == 0 or i == iters - 1:
-            ranks = cut_lineage(ranks)
-    return ranks.select("node", "rank")
+        )
+
+    def update(c: Column, dang: Column | None, n: int) -> Column:
+        rank = F.lit(1.0 - damping) * F.col("_reset") + F.lit(damping) * c
+        if dang is not None:
+            rank = rank + (F.lit(damping) * dang) * F.col("_reset")
+        return rank
+
+    return _walk(
+        edges, src_col, dst_col, edge_weight_col, iters, start, update
+    )
+
+
+def _bfs(
+    visited: DataFrame,
+    edges: DataFrame,
+    max_depth: int,
+    keys: "list[str] | tuple[str, ...]" = (),
+) -> DataFrame:
+    """Level-synchronous frontier expansion shared by :func:`bfs_depths`,
+    :func:`approx_closeness` and the backward reach of
+    :func:`strongly_connected_components` -> ``visited`` grown to
+    (*keys, node, depth).
+
+    ``visited`` holds the depth-0 rows; ``keys`` name the columns that
+    make one search per key value (the seed in closeness, the color class
+    in SCC), so a node is visited once PER KEY. ``edges`` is (src, dst,
+    ...): a frontier row steps along an edge whose ``src`` is its node and
+    whose other columns (besides ``dst``) equal the row's — a color class
+    only walks its own edges. Each level is ONE equi-join of the frontier
+    with the edge relation, a distinct, and an anti-join against the
+    visited set; first arrival wins, so ``depth`` is the true BFS
+    distance. Cycles terminate naturally (a revisited node is anti-joined
+    away) and the loop exits early on an empty frontier — one cheap
+    ``limit(1)`` count per level against the already-cut frontier.
+    Lineage is cut every level (reliable checkpoints under a configured
+    dir).
+    """
+    on = [c for c in edges.columns if c != "dst"]
+    visited = cut_lineage(visited)
+    frontier = visited
+    for d in range(1, max_depth + 1):
+        nxt = cut_lineage(
+            frontier.withColumnRenamed("node", "src")
+            .join(edges, on)
+            .select(*keys, F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select(*keys, "node"), [*keys, "node"], "left_anti")
+            .withColumn("depth", F.lit(d).cast("long"))
+        )
+        if nxt.limit(1).count() == 0:
+            break
+        visited = cut_lineage(visited.unionByName(nxt))
+        frontier = nxt
+    return visited
 
 
 def bfs_depths(
@@ -477,45 +464,25 @@ def bfs_depths(
 ) -> DataFrame:
     """Min-hop distance from a seed set -> (node, depth), depth <= max_depth.
 
-    Level-synchronous frontier expansion — the KG neighborhood primitive
-    (entity k-hop context, crawl-frontier growth, contamination blast
-    radius). Each level is ONE equi-join of the current frontier with the
-    edge relation, a distinct, and an anti-join against the visited set;
-    first arrival wins, so ``depth`` is the true BFS distance. Cycles
-    terminate naturally (a revisited node is anti-joined away) and the
-    loop exits early on an empty frontier — one cheap count per level
-    against the already-checkpointed frontier, the same per-iteration
-    job discipline as :func:`pagerank`.
+    Level-synchronous frontier expansion (:func:`_bfs`) — the KG
+    neighborhood primitive (entity k-hop context, crawl-frontier growth,
+    contamination blast radius).
 
     100 TB shape: per level, the frontier⋈edges shuffle is keyed on the
     hop node (AQE splits hub keys); the visited anti-join shuffles both
     sides on node. Web graphs have tiny effective diameter, so levels are
-    few and the frontier collapses after the first hops; lineage is cut
-    every level (reliable checkpoints under a configured dir). The
-    driver oracle (``g_bfs_depth``) re-derives the same depths in DuckDB
-    with a depth-bounded recursive CTE + min(depth) — an independent
-    all-paths enumeration against this visited-pruned expansion.
+    few and the frontier collapses after the first hops. The driver
+    oracle (``g_bfs_depth``) re-derives the same depths in DuckDB with a
+    depth-bounded recursive CTE + min(depth) — an independent all-paths
+    enumeration against this visited-pruned expansion.
     """
-    visited = cut_lineage(
+    return _bfs(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
-        .withColumn("depth", F.lit(0).cast("long"))
+        .withColumn("depth", F.lit(0).cast("long")),
+        edges.select("src", "dst"),
+        max_depth,
     )
-    frontier = visited
-    e = edges.select("src", "dst")
-    for d in range(1, max_depth + 1):
-        nxt = cut_lineage(
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("depth", F.lit(d).cast("long"))
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = cut_lineage(visited.unionByName(nxt))
-        frontier = nxt
-    return visited
 
 
 def random_walks(
@@ -1007,6 +974,70 @@ def components_starstar(
     )
 
 
+def _hyperball_states(
+    edges: DataFrame,
+    radius: int,
+    b: int,
+    node_col: str,
+    nbr_col: str,
+    partitions: int,
+):
+    """The HyperBall register loop shared by :func:`hyperball`,
+    :func:`hyperball_harmonic` and :func:`hyperball_nf`: yields the
+    (node, j, r) HLL register relation of ball(node, r) for r = 0 ..
+    ``radius``, where a ball grows from ``node`` along (node_col ->
+    nbr_col) edges (self-loops ignored). Each yielded relation is already
+    cut, so a finalizer built on one round never replays the others.
+
+    Register algebra: ball(v, 0) = {v} is :func:`sketches.hll_state` of
+    the node id; ball(v, r) = ball(v, r-1) ∪ ⋃_{v->u} ball(u, r-1) is a
+    register-wise max over ``state ∪ (edges ⋈ state)``.
+
+    Plan discipline: the edge relation is cut ONCE, hash-partitioned and
+    sorted on the join key, so every round's contribution join reuses it
+    with no exchange and no re-sort (and the distinct is not recomputed
+    per round, which the live plan would have done). Each round has ONE
+    exchange: a repartition by node BEFORE the register max — hash(node)
+    clusters (node, j) (partitioning on a subset of the grouping key
+    satisfies the aggregation's distribution), so the groupBy adds no
+    exchange and the output stays node-partitioned for the next round's
+    join."""
+    from .sketches import hll_state
+
+    e = cut_lineage(
+        edges.select(F.col(node_col).alias("node"), F.col(nbr_col).alias("_nbr"))
+        .where(F.col("node") != F.col("_nbr"))
+        .distinct()
+        .repartition(partitions, "_nbr")
+        .sortWithinPartitions("_nbr")
+    )
+    nodes = (
+        e.select("node")
+        .union(e.select(F.col("_nbr").alias("node")))
+        .distinct()
+    )
+    state = cut_lineage(
+        hll_state(
+            nodes.withColumn("_member", F.col("node")),
+            ["node"],
+            "_member",
+            b,
+        ).repartition(partitions, "node")
+    )
+    yield state
+    for _ in range(radius):
+        contrib = e.join(
+            state.withColumnRenamed("node", "_nbr"), "_nbr"
+        ).select("node", "j", "r")
+        state = cut_lineage(
+            state.unionByName(contrib)
+            .repartition(partitions, "node")
+            .groupBy("node", "j")
+            .agg(F.max("r").alias("r"))
+        )
+        yield state
+
+
 def hyperball(
     edges: DataFrame,
     radius: int,
@@ -1046,56 +1077,17 @@ def hyperball(
 
     100 TB shape: per round, the join fans each edge out by at most m
     register rows and the max agg combines map-side; hub in-degree skew
-    is an AQE skew-join case, not a window. Lineage is cut every round
-    (:func:`checkpointing.cut_lineage`) so round k never replays
-    rounds 1..k-1."""
-    from .sketches import _hll_finalize, hll_state
+    is an AQE skew-join case, not a window. The rounds are
+    :func:`_hyperball_states`' (lineage cut every round, so round k never
+    replays rounds 1..k-1); this entry finalizes the last one."""
+    from .sketches import _hll_finalize
 
     if radius < 0:
         raise ValueError("hyperball needs radius >= 0")
-    # the edge relation is cut ONCE, hash-partitioned and sorted on the
-    # join key: every round's contribution join then reuses it with no
-    # exchange and no re-sort (and the distinct is not recomputed per
-    # round, which the live plan would have done)
-    e = cut_lineage(
-        edges.select(
-            F.col(src_col).alias("node"), F.col(dst_col).alias("_nbr")
-        )
-        .where(F.col("node") != F.col("_nbr"))
-        .distinct()
-        .repartition(partitions, "_nbr")
-        .sortWithinPartitions("_nbr")
-    )
-    nodes = (
-        e.select("node")
-        .union(e.select(F.col("_nbr").alias("node")))
-        .distinct()
-    )
-    state = cut_lineage(
-        hll_state(
-            nodes.withColumn("_member", F.col("node")),
-            ["node"],
-            "_member",
-            b,
-        ).repartition(partitions, "node")
-    )
-    for _ in range(radius):
-        contrib = (
-            e.join(
-                state.withColumnRenamed("node", "_nbr"), "_nbr"
-            ).select("node", "j", "r")
-        )
-        # ONE exchange per round: repartition by node BEFORE the register
-        # max — hash(node) clusters (node, j) (partitioning on a subset of
-        # the grouping key satisfies the aggregation's distribution), so
-        # the groupBy adds no exchange and the output stays node-
-        # partitioned for the next round's join
-        state = cut_lineage(
-            state.unionByName(contrib)
-            .repartition(partitions, "node")
-            .groupBy("node", "j")
-            .agg(F.max("r").alias("r"))
-        )
+    for state in _hyperball_states(
+        edges, radius, b, src_col, dst_col, partitions
+    ):
+        pass
     return _hll_finalize(state, ["node"], b).withColumnRenamed(
         "est_distinct", "est_ball"
     )
@@ -1142,62 +1134,28 @@ def hyperball_harmonic(
     error per term.
 
     100 TB shape: exactly :func:`hyperball`'s per-round cost (one
-    equi-join + one combinable max agg, <= m register rows per node),
+    equi-join + one combinable max agg, <= m register rows per node —
+    the same :func:`_hyperball_states` loop, every round finalized),
     plus ``max_radius`` node-keyed equi-joins of node-sized estimate
     relations at the end."""
-    from .sketches import _hll_finalize, hll_state
+    import math
+
+    from .sketches import _hll_finalize
 
     if max_radius < 1:
         raise ValueError("hyperball_harmonic needs max_radius >= 1")
     a, z = (dst_col, src_col) if reverse else (src_col, dst_col)
-    # same per-round plan discipline as :func:`hyperball`: edge relation
-    # cut + pre-partitioned/sorted on the join key once; one exchange per
-    # round (repartition-by-node feeding the register max)
-    e = cut_lineage(
-        edges.select(F.col(a).alias("node"), F.col(z).alias("_nbr"))
-        .where(F.col("node") != F.col("_nbr"))
-        .distinct()
-        .repartition(partitions, "_nbr")
-        .sortWithinPartitions("_nbr")
-    )
-    nodes = (
-        e.select("node")
-        .union(e.select(F.col("_nbr").alias("node")))
-        .distinct()
-    )
-    state = cut_lineage(
-        hll_state(
-            nodes.withColumn("_member", F.col("node")),
-            ["node"],
-            "_member",
-            b,
-        ).repartition(partitions, "node")
-    )
-    ests = [
-        _hll_finalize(state, ["node"], b).select(
-            "node", F.col("est_distinct").alias("_e0")
-        )
-    ]
-    for r in range(1, max_radius + 1):
-        contrib = e.join(
-            state.withColumnRenamed("node", "_nbr"), "_nbr"
-        ).select("node", "j", "r")
-        state = cut_lineage(
-            state.unionByName(contrib)
-            .repartition(partitions, "node")
-            .groupBy("node", "j")
-            .agg(F.max("r").alias("r"))
-        )
-        ests.append(
+    joined = reduce(
+        lambda left, right: left.join(right, "node"),
+        [
             _hll_finalize(state, ["node"], b).select(
                 "node", F.col("est_distinct").alias(f"_e{r}")
             )
-        )
-    joined = ests[0]
-    for r in range(1, max_radius + 1):
-        joined = joined.join(ests[r], "node")
-    import math
-
+            for r, state in enumerate(
+                _hyperball_states(edges, max_radius, b, a, z, partitions)
+            )
+        ],
+    )
     h = F.lit(0.0)
     lcm = 1
     for r in range(1, max_radius + 1):
@@ -1238,63 +1196,35 @@ def hyperball_nf(
     partition-order-dependent; a 4dp-rounded decimal sum would tie).
     ``nf_x10000 / 10000`` is the NF estimate.
 
-    100 TB shape: per round exactly :func:`hyperball`'s cost; per
-    radius ONE map-side-combinable (count, sum) aggregation — output is
-    max_radius + 1 rows."""
-    from .sketches import _hll_finalize, hll_state
+    100 TB shape: per round exactly :func:`hyperball`'s cost (the same
+    :func:`_hyperball_states` loop); per radius ONE map-side-combinable
+    (count, sum) aggregation — output is max_radius + 1 rows."""
+    from .sketches import _hll_finalize
 
     if max_radius < 0:
         raise ValueError("hyperball_nf needs max_radius >= 0")
-    # same per-round plan discipline as :func:`hyperball`
-    e = cut_lineage(
-        edges.select(
-            F.col(src_col).alias("node"), F.col(dst_col).alias("_nbr")
-        )
-        .where(F.col("node") != F.col("_nbr"))
-        .distinct()
-        .repartition(partitions, "_nbr")
-        .sortWithinPartitions("_nbr")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _hll_finalize(state, ["node"], b)
+            .select(
+                F.lit(r).cast("long").alias("radius"),
+                F.round(F.col("est_distinct") * F.lit(10000.0), 0)
+                .cast("long")
+                .alias("_s"),
+            )
+            .groupBy("radius")
+            .agg(
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.sum("_s").cast("long").alias("nf_x10000"),
+            )
+            for r, state in enumerate(
+                _hyperball_states(
+                    edges, max_radius, b, src_col, dst_col, partitions
+                )
+            )
+        ],
     )
-    nodes = (
-        e.select("node")
-        .union(e.select(F.col("_nbr").alias("node")))
-        .distinct()
-    )
-    state = cut_lineage(
-        hll_state(
-            nodes.withColumn("_member", F.col("node")),
-            ["node"],
-            "_member",
-            b,
-        ).repartition(partitions, "node")
-    )
-
-    def nf_row(st: DataFrame, radius: int) -> DataFrame:
-        est = _hll_finalize(st, ["node"], b)
-        return est.select(
-            F.lit(radius).cast("long").alias("radius"),
-            F.col("node"),
-            F.round(F.col("est_distinct") * F.lit(10000.0), 0)
-            .cast("long")
-            .alias("_s"),
-        ).groupBy("radius").agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum("_s").cast("long").alias("nf_x10000"),
-        )
-
-    out = nf_row(state, 0)
-    for r in range(1, max_radius + 1):
-        contrib = e.join(
-            state.withColumnRenamed("node", "_nbr"), "_nbr"
-        ).select("node", "j", "r")
-        state = cut_lineage(
-            state.unionByName(contrib)
-            .repartition(partitions, "node")
-            .groupBy("node", "j")
-            .agg(F.max("r").alias("r"))
-        )
-        out = out.unionByName(nf_row(state, r))
-    return out
 
 
 def rank_topk(ranks: DataFrame, k: int) -> DataFrame:
@@ -1751,7 +1681,6 @@ def strongly_connected_components(
     max_rounds: int = 8,
     max_color_iters: int = 30,
     max_trim_iters: int = 50,
-    strict: bool = True,
 ) -> DataFrame:
     """Strongly-connected components of a directed (src, dst) edge set ->
     (node, component), component = min member id. The web-graph bow-tie
@@ -1774,18 +1703,18 @@ def strongly_connected_components(
          combinable max — hub skew is AQE territory, same as pagerank.
       3. BACKWARD REACH from every color root at once, restricted to
          same-color edges: nodes that reach their root within the color
-         class form exactly the root's SCC. Level-synchronous frontier
-         expansion like :func:`bfs_depths`, all roots in parallel.
+         class form exactly the root's SCC. :func:`bfs_depths`' frontier
+         (:func:`_bfs`) over the reversed same-color edges, keyed by
+         color, so all roots expand in parallel.
       4. Relabel each found SCC to min member id, remove its nodes,
          repeat.
 
     Every round removes at least every color-root SCC (plus everything
     trimmable), so rounds are few on real graphs — the bow-tie paper's
-    structure collapses in 2-3. ``strict=True`` (default) raises if any
-    node is still unassigned after ``max_rounds``/``max_color_iters``
-    budgets — a partial SCC labeling is wrong, not approximate, so there
-    is no non-strict silent mode unless the caller opts in to get the
-    assigned subset (unassigned nodes are then ABSENT, never mislabeled).
+    structure collapses in 2-3. A coloring that has not converged
+    within ``max_color_iters`` iterations, or a node still unassigned
+    after ``max_rounds`` rounds, raises ``RuntimeError``: a partial SCC
+    labeling is wrong, not approximate, so there is no silent mode.
 
     100 TB shape: every step is an equi-join / semi-join / map-side-
     combined max over the remaining subgraph — no all-pairs relation, no
@@ -1802,10 +1731,13 @@ def strongly_connected_components(
         .unionByName(e_all.select(F.col("dst").alias("node")))
         .distinct()
     )
-    assigned = None  # (node, component) accumulator
+    assigned: list[DataFrame] = []  # (node, component) per peel
 
-    def acc(a: DataFrame | None, more: DataFrame) -> DataFrame:
-        return more if a is None else a.unionByName(more)
+    def induced(e: DataFrame, keep: DataFrame) -> DataFrame:
+        return cut_lineage(
+            e.join(keep.select(F.col("node").alias("src")), "src", "left_semi")
+            .join(keep.select(F.col("node").alias("dst")), "dst", "left_semi")
+        )
 
     remaining, e = nodes, e_all
     for _round in range(max_rounds):
@@ -1825,24 +1757,17 @@ def strongly_connected_components(
             peeled = remaining.join(keep, "node", "left_anti")
             if peeled.limit(1).count() == 0:
                 break
-            assigned = acc(
-                assigned, peeled.select("node", F.col("node").alias("component"))
+            assigned.append(
+                peeled.select("node", F.col("node").alias("component"))
             )
             remaining = keep
-            e = cut_lineage(
-                e.join(
-                    keep.select(F.col("node").alias("src")), "src", "left_semi"
-                ).join(
-                    keep.select(F.col("node").alias("dst")), "dst", "left_semi"
-                )
-            )
+            e = induced(e, keep)
         if remaining.limit(1).count() == 0:
             break
         # -- 2. forward max-coloring to fixpoint --
         color = cut_lineage(
             remaining.select("node", F.col("node").alias("color"))
         )
-        converged = False
         for _it in range(max_color_iters):
             incoming = (
                 color.join(e, color["node"] == e["src"])
@@ -1867,18 +1792,16 @@ def strongly_connected_components(
             )
             color = nxt
             if changed == 0:
-                converged = True
                 break
-        if not converged:
-            if strict:
-                raise RuntimeError(
-                    f"SCC coloring did not converge in {max_color_iters} "
-                    "iterations — raise max_color_iters (long in-chains "
-                    "need as many rounds as their length)"
-                )
-            break
+        else:
+            raise RuntimeError(
+                f"SCC coloring did not converge in {max_color_iters} "
+                "iterations — raise max_color_iters (long in-chains "
+                "need as many rounds as their length)"
+            )
         # -- 3. backward reach from every color root within its class --
-        # edge (u -> v) usable backward from v to u iff both same color
+        # edge (u -> v) usable backward from v to u iff both same color;
+        # the reach ends on an empty frontier, so its depth is unbounded
         ec = cut_lineage(
             e.join(
                 color.select(F.col("node").alias("src"), F.col("color").alias("cs")),
@@ -1889,56 +1812,42 @@ def strongly_connected_components(
                 "dst",
             )
             .where(F.col("cs") == F.col("cd"))
-            .select("src", "dst", F.col("cs").alias("color"))
-        )
-        scc = cut_lineage(
-            color.where(F.col("node") == F.col("color")).select("node", "color")
-        )
-        frontier = scc
-        while True:
-            nxt = cut_lineage(
-                frontier.join(
-                    ec,
-                    (frontier["node"] == ec["dst"])
-                    & (frontier["color"] == ec["color"]),
-                )
-                .select(F.col("src").alias("node"), frontier["color"])
-                .distinct()
-                .join(scc, "node", "left_anti")
+            .select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"),
+                F.col("cs").alias("color"),
             )
-            if nxt.limit(1).count() == 0:
-                break
-            scc = cut_lineage(scc.unionByName(nxt))
-            frontier = nxt
+        )
+        scc = _bfs(
+            color.where(F.col("node") == F.col("color")).select(
+                "color", "node", F.lit(0).cast("long").alias("depth")
+            ),
+            ec,
+            sys.maxsize,
+            keys=["color"],
+        )
         # -- 4. relabel to min member id, peel, next round --
         labels = scc.groupBy("color").agg(F.min("node").alias("component"))
         found = cut_lineage(
             scc.join(labels, "color").select("node", "component")
         )
-        assigned = acc(assigned, found)
+        assigned.append(found)
         remaining = cut_lineage(
             remaining.join(found.select("node"), "node", "left_anti")
         )
         if remaining.limit(1).count() == 0:
             break
-        e = cut_lineage(
-            e.join(
-                remaining.select(F.col("node").alias("src")), "src", "left_semi"
-            ).join(
-                remaining.select(F.col("node").alias("dst")), "dst", "left_semi"
-            )
-        )
+        e = induced(e, remaining)
     else:
-        if remaining.limit(1).count() != 0 and strict:
+        if remaining.limit(1).count() != 0:
             raise RuntimeError(
                 f"SCC did not assign every node in {max_rounds} rounds — "
                 "raise max_rounds"
             )
-    if assigned is None:
+    if not assigned:
         return nodes.select(
             "node", F.col("node").alias("component")
         ).limit(0)
-    return assigned
+    return reduce(DataFrame.unionByName, assigned)
 
 
 def bowtie_roles(
@@ -2174,12 +2083,12 @@ def approx_closeness(
     reached pairs count, the web-graph reality Eppstein-Wang's
     connected-graph formula ignores).
 
-    100 TB shape: identical to :func:`bfs_depths` with the frontier
-    carrying (seed, node) — per level one equi-join keyed on the hop
-    node (AQE splits hubs) and one anti-join on (seed, node); state is
-    at most n_seeds x reachable-nodes, the deliberate EW trade. Seed
-    selection is a TakeOrderedAndProject heap merge, not a sort. Lineage
-    cut per level.
+    100 TB shape: :func:`bfs_depths`' frontier (:func:`_bfs`) keyed by
+    ``seed``, so it carries (seed, node) — per level one equi-join keyed
+    on the hop node (AQE splits hubs) and one anti-join on (seed, node);
+    state is at most n_seeds x reachable-nodes, the deliberate EW trade.
+    Seed selection is a TakeOrderedAndProject heap merge, not a sort.
+    Lineage cut per level.
     """
     if n_seeds < 1 or max_depth < 1:
         raise ValueError("approx_closeness needs n_seeds, max_depth >= 1")
@@ -2196,29 +2105,16 @@ def approx_closeness(
         .limit(n_seeds)
         .select(F.col("node").alias("seed"))
     )
-    visited = cut_lineage(
+    visited = _bfs(
         seeds.select(
             "seed",
             F.col("seed").alias("node"),
             F.lit(0).cast("long").alias("depth"),
-        )
+        ),
+        edges.select("src", "dst"),
+        max_depth,
+        keys=["seed"],
     )
-    frontier = visited
-    e = edges.select("src", "dst")
-    for d in range(1, max_depth + 1):
-        nxt = cut_lineage(
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(
-                visited.select("seed", "node"), ["seed", "node"], "left_anti"
-            )
-            .withColumn("depth", F.lit(d).cast("long"))
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = cut_lineage(visited.unionByName(nxt))
-        frontier = nxt
     agg = visited.groupBy("node").agg(
         F.count(F.lit(1)).alias("reached"),
         F.sum("depth").alias("sum_depth"),

@@ -48,6 +48,49 @@ def package_zip() -> str:
     return out
 
 
+def _conf(parallel: int) -> dict[str, str]:
+    """The conf both session factories set; ``parallel`` is the total
+    task-slot count (shuffle partitions ~2x cores)."""
+    return {
+        "spark.sql.shuffle.partitions": str(2 * parallel),
+        "spark.default.parallelism": str(2 * parallel),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        # python-heavy scans want more, smaller splits than the JVM default
+        # (task cost is dominated by the UDF, not scan setup)
+        "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # pin wall-clock<->epoch conversions to UTC so timestamp results
+        # (unix_micros, date parsing, NTZ casts) do not depend on the
+        # driver host's TZ — on a cluster the driver and executors may
+        # disagree with each other and with the oracle engine otherwise
+        "spark.sql.session.timeZone": "UTC",
+        # reliable cut_lineage checkpoints: let the context cleaner
+        # delete superseded iterations' checkpoint files once their
+        # RDDs are garbage-collected (otherwise every pagerank/CC
+        # round leaves a permanent rdd-N dir on durable storage)
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    }
+
+
+def _session(master: str, app: str, conf: dict[str, str]) -> SparkSession:
+    builder = SparkSession.builder.master(master).appName(app)
+    for key, value in conf.items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    # opt into reliable (executor-loss-safe) lineage cuts for the iterative
+    # operators: every checkpointing.cut_lineage site switches from
+    # localCheckpoint to checkpoint when this dir is set
+    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckpt_dir and not spark.sparkContext.getCheckpointDir():
+        spark.sparkContext.setCheckpointDir(ckpt_dir)
+    return spark
+
+
 def get_spark_cluster(
     app: str = "chunksilo_spark",
     executors: int = 2,
@@ -58,33 +101,18 @@ def get_spark_cluster(
     is its OWN JVM with its own python workers — the faithful single-box
     emulation of an N-executor cluster (used for the N vs 4N scaling
     evidence; one big local[k] JVM hits GC/scheduler contention that real
-    clusters never see). The package ships via addPyFile (--py-files)."""
-    total = executors * cores_per_executor
-    spark = (
-        SparkSession.builder.master(
-            f"local-cluster[{executors},{cores_per_executor},{executor_mem_mb}]"
-        )
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(2 * total))
-        .config("spark.default.parallelism", str(2 * total))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", "4g")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        # reliable cut_lineage checkpoints: let the context cleaner
-        # delete superseded iterations' checkpoint files once their
-        # RDDs are garbage-collected (otherwise every pagerank/CC
-        # round leaves a permanent rdd-N dir on durable storage)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
+    clusters never see). The package ships via addPyFile (--py-files).
+    Executors here CAN be lost, so ``SPARK_GRAFT_CHECKPOINT_DIR`` is
+    forwarded exactly as :func:`get_spark` does."""
+    spark = _session(
+        f"local-cluster[{executors},{cores_per_executor},{executor_mem_mb}]",
+        app,
+        {
+            **_conf(executors * cores_per_executor),
+            "spark.driver.memory": "4g",
+            "spark.executorEnv.OMP_NUM_THREADS": "1",
+            "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
+        },
     )
     spark.sparkContext.addPyFile(package_zip())
     return spark
@@ -92,39 +120,13 @@ def get_spark_cluster(
 
 def get_spark(app: str = "chunksilo_spark", cores: int | None = None) -> SparkSession:
     cores = cores or cpu_count()
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(2 * cores))
-        .config("spark.default.parallelism", str(2 * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        # python-heavy scans want more, smaller splits than the JVM default
-        # (task cost is dominated by the UDF, not scan setup)
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # pin wall-clock<->epoch conversions to UTC so timestamp results
-        # (unix_micros, date parsing, NTZ casts) do not depend on the
-        # driver host's TZ — on a cluster the driver and executors may
-        # disagree with each other and with the oracle engine otherwise
-        # (mirrored in get_spark_cluster above)
-        .config("spark.sql.session.timeZone", "UTC")
-        # reliable cut_lineage checkpoints: let the context cleaner
-        # delete superseded iterations' checkpoint files once their
-        # RDDs are garbage-collected (otherwise every pagerank/CC
-        # round leaves a permanent rdd-N dir on durable storage)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
+    return _session(
+        f"local[{cores}]",
+        app,
+        {
+            **_conf(cores),
+            "spark.driver.memory": os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM", "8g"
+            ),
+        },
     )
-    # opt into reliable (executor-loss-safe) lineage cuts for the iterative
-    # operators: every checkpointing.cut_lineage site switches from
-    # localCheckpoint to checkpoint when this dir is set
-    ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt_dir and not spark.sparkContext.getCheckpointDir():
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
-    return spark

@@ -217,6 +217,30 @@ class TestPageRank:
         edges = spark.createDataFrame([], "src long, dst long")
         assert G.pagerank(edges, iters=2).count() == 0
 
+    @pytest.mark.parametrize("weight_col", [None, "support"])
+    def test_uniform_ppr_is_pagerank(self, spark, weight_col):
+        # both entries run one walk: teleporting uniformly to every node
+        # IS pagerank, dangling node 4 included, weighted or not
+        rows = [(s, t, float(1 + (s + t) % 3)) for s, t in self.EDGES]
+        e = spark.createDataFrame(rows, "src long, dst long, support double")
+        nodes = sorted({n for edge in self.EDGES for n in edge})
+        seeds = spark.createDataFrame(
+            [(n, 1.0) for n in nodes], "node long, weight double"
+        )
+        pr = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(e, iters=5, weight_col=weight_col).collect()
+        }
+        ppr = {
+            r["node"]: r["rank"]
+            for r in G.personalized_pagerank(
+                e, seeds, iters=5, edge_weight_col=weight_col
+            ).collect()
+        }
+        assert set(ppr) == set(pr) == set(nodes)
+        for v in pr:
+            assert ppr[v] == pytest.approx(pr[v], abs=1e-12), v
+
 
 class TestDegreesAndHops:
     EDGES = [(0, 9), (1, 9), (2, 9), (3, 8), (4, 8), (9, 8), (8, 7)]
@@ -1157,11 +1181,13 @@ class TestPropagateLabels:
 
 def _python_ppr(edges, seeds, iters, d=0.85):
     nodes = sorted({n for e in edges for n in e})
-    w_tot = sum(w for n, w in seeds if n in set(nodes))
-    reset = {n: 0.0 for n in nodes}
+    # seed weights sum per node, then normalize over in-graph seeds
+    w_node = {}
     for n, w in seeds:
-        if n in reset:
-            reset[n] = w / w_tot
+        if n in set(nodes):
+            w_node[n] = w_node.get(n, 0.0) + w
+    w_tot = sum(w_node.values())
+    reset = {n: w_node.get(n, 0.0) / w_tot for n in nodes}
     out = {}
     for s, t in edges:
         out.setdefault(s, []).append(t)
@@ -1215,6 +1241,30 @@ class TestPersonalizedPagerank:
         e = spark.createDataFrame(self.EDGES, "src long, dst long")
         s = spark.createDataFrame([(99, 1.0)], "node long, weight double")
         assert G.personalized_pagerank(e, s, iters=2).count() == 0
+
+    def test_duplicate_seeds_sum_per_node(self, spark):
+        # a node seeded twice is ONE rank row whose reset is the summed
+        # weight: identical to seeding it once with that sum
+        e = spark.createDataFrame(self.EDGES, "src long, dst long")
+        schema = "node long, weight double"
+        dup = spark.createDataFrame([(0, 1.0), (0, 1.0)], schema)
+        once = spark.createDataFrame([(0, 2.0)], schema)
+        got = [
+            (r["node"], r["rank"])
+            for r in G.personalized_pagerank(e, dup, iters=3).collect()
+        ]
+        nodes = [n for n, _ in got]
+        assert len(nodes) == len(set(nodes))
+        assert abs(sum(r for _, r in got) - 1.0) < 1e-9
+        want = {
+            r["node"]: r["rank"]
+            for r in G.personalized_pagerank(e, once, iters=3).collect()
+        }
+        assert dict(got) == want
+        oracle = _python_ppr(self.EDGES, [(0, 1.0), (0, 1.0)], 3)
+        assert set(oracle) == set(want)
+        for n in oracle:
+            assert abs(want[n] - oracle[n]) < 1e-9, n
 
 
 def _python_link_pred(edges):

@@ -128,6 +128,13 @@ class TestRelatedEntities:
         ranks = [r["rank"] for r in rows]
         assert ranks == sorted(ranks, reverse=True)
 
+    def test_repeated_seed_counts_once(self, tables, an_entity):
+        cid, _ = an_entity
+        once = K.related_entities(tables["edges"], [cid], k=10).collect()
+        twice = K.related_entities(tables["edges"], [cid, cid], k=10).collect()
+        assert twice == once
+        assert len({r["node"] for r in twice}) == len(twice)
+
 
 class TestPropertyPath:
     def test_depth1_equals_edge_scan_and_transitivity(self, tables):
