@@ -879,7 +879,7 @@ def _kg_pipeline_mini(spark, sf):  # end-to-end KG DAG (rows-only)
     from chunksilo_spark.operators import stage1_extract as s1
     from chunksilo_spark.operators import stage2_link as s2
     from chunksilo_spark.operators import stage3_triples as s3
-    from chunksilo_spark.operators.canon import canon_map, normalize_column
+    from chunksilo_spark.plans.pipeline import _canon_from_linked
     from chunksilo_spark.sources.corpus import aliases_df, pages_df
 
     pages = pages_df(spark, 100, partitions=8)
@@ -888,12 +888,7 @@ def _kg_pipeline_mini(spark, sf):  # end-to-end KG DAG (rows-only)
     alias_bc = s2.build_alias_broadcast(spark, aliases)
     linked = s2.detect_and_link(documents, alias_bc)
     raw = s3.extract_raw_triples(documents)
-
-    surfaces = aliases.select(F.col("alias").alias("s")).unionByName(
-        linked.select(F.col("surface").alias("s"))
-    )
-    surfaces = normalize_column(surfaces.distinct(), "s").distinct()
-    canon = canon_map(surfaces)
+    canon = _canon_from_linked(aliases, linked)
     triples = s3.canonical_triples(raw, s3.linked_surfaces(linked), canon)
     return (
         triples.groupBy("subj_canon", "pred", "obj_canon")

@@ -21,34 +21,186 @@ Stage graph:
     triples ──4──> nodes, edges, lineage
     pages ──5 (opt)──> outlinks ──> web_edges ──> web_rank   (link graph)
                  └──> web_anchors ──> web_aliases       (anchor aliases)
+
+The graph is declared once, as the stage list ``_STAGES``: the build
+(``run_pipeline``) and the refresh (``apply_increment``) both walk it.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import time
+from functools import partial
+from typing import Callable, NamedTuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
 from ..operators import canon as canon_ops
+from ..operators import graph as g
 from ..operators import stage1_extract as s1
 from ..operators import stage2_link as s2
 from ..operators import stage3_triples as s3
+from ..operators.retrieval import chunks_with_embeddings
 from ..sources.storage import TableStore
 from .lineage import LINEAGE_SCHEMA, record_lineage
 
 
-# the key column each table's lineage rows bound: run_pipeline hands the same
-# to _materialize; apply_increment and _convert_legacy_lineage look it up here
-_LINEAGE_KEYS = {
-    "documents": "url", "chunks": "url", "quarantine": "url",
-    "mentions": "url", "linked_mentions": "url", "raw_triples": "url",
-    "canon_map": "norm", "triples": "url", "nodes": "canon_id",
-    "edges": "subj_canon_id", "outlinks": "url", "web_edges": "src",
-    "web_rank": "node", "web_anchors": "url", "web_aliases": "dst",
-}
+def _canon_from_linked(
+    aliases: DataFrame, linked_mentions: DataFrame
+) -> DataFrame:
+    """canon_map over dictionary aliases ∪ linked mention surfaces."""
+    surfaces = aliases.select(F.col("alias").alias("s")).unionByName(
+        linked_mentions.select(F.col("surface").alias("s"))
+    )
+    surfaces = canon_ops.normalize_column(surfaces.distinct(), "s").distinct()
+    return canon_ops.canon_map(surfaces)
+
+
+def _build_triples(
+    raw_triples: DataFrame, linked_mentions: DataFrame, canon_map: DataFrame
+) -> DataFrame:
+    return s3.canonical_triples(
+        raw_triples, s3.linked_surfaces(linked_mentions), canon_map
+    )
+
+
+def _build_nodes(triples: DataFrame) -> DataFrame:
+    """Distinct canonical entities with mention statistics."""
+    subj = triples.select(
+        F.col("subj_canon_id").alias("canon_id"),
+        F.col("subj_canon").alias("canon_surface"),
+        F.col("url"),
+    )
+    obj = triples.select(
+        F.col("obj_canon_id").alias("canon_id"),
+        F.col("obj_canon").alias("canon_surface"),
+        F.col("url"),
+    )
+    return (
+        subj.unionByName(obj)
+        .groupBy("canon_id", "canon_surface")
+        .agg(
+            F.count(F.lit(1)).alias("n_mentions"),
+            F.countDistinct("url").alias("n_urls"),
+        )
+    )
+
+
+def _build_edges(triples: DataFrame) -> DataFrame:
+    """Aggregated edge table with support counts."""
+    return triples.groupBy(
+        "subj_canon_id", "subj_canon", "pred", "obj_canon_id", "obj_canon"
+    ).agg(
+        F.count(F.lit(1)).alias("support"),
+        F.countDistinct("url").alias("n_urls"),
+    )
+
+
+def _build_web_edges(outlinks: DataFrame, documents: DataFrame) -> DataFrame:
+    """Intra-crawl edges: outlinks whose target is a crawled url (the
+    documents table carries every crawled url, quarantined or not). Shares
+    graph.restrict_to_targets with the bench's crawl_edges path, so the
+    measured operator and the materialized table cannot drift apart."""
+    return g.restrict_to_targets(
+        outlinks.select(F.col("url").alias("src"), "dst"),
+        documents.select("url"),
+    )
+
+
+def _build_web_rank(web_edges: DataFrame, pagerank_iters: int) -> DataFrame:
+    ranks = g.pagerank(web_edges, iters=pagerank_iters)
+    return ranks.select("node", F.round("rank", 6).alias("rank"))
+
+
+def _build_web_aliases(web_anchors: DataFrame) -> DataFrame:
+    """Anchor-text alias candidates: top-3 anchors per target url
+    (graph.alias_candidates over the row-level web_anchors table). The
+    corpus-derived complement of the broadcast alias dictionary —
+    candidate surface forms for entities whose home urls the crawl links
+    to. Unlike web_edges this is NOT restricted to crawled urls: the whole
+    point is naming things the crawl points AT (kb-style targets)."""
+    return g.alias_candidates(web_anchors.withColumnRenamed("url", "src"), k=3)
+
+
+class _Stage(NamedTuple):
+    """One stage of the DAG. ``build``'s parameters name its inputs: an
+    upstream table, or one of the run's own inputs (``pages``, ``aliases``,
+    ``alias_bc``, ``partitions``, ``pagerank_iters``)."""
+
+    name: str  # the manifest's stage name
+    table: str
+    key: str  # the column each lineage row bounds
+    role: str  # "row": a refresh maintains it by url; "global": rebuilt
+    build: Callable[..., DataFrame]
+    link_graph: bool = False  # materialized only with link_graph=True
+
+    @property
+    def inputs(self) -> tuple[str, ...]:
+        return tuple(inspect.signature(self.build).parameters)
+
+    def run(self, tables: dict) -> DataFrame:
+        return self.build(**{n: tables[n] for n in self.inputs})
+
+
+# in dependency order. Operators are called through their modules, so the
+# function a stage runs is looked up when it runs.
+_STAGES = (
+    _Stage("stage1_extract", "documents", "url", "row",
+           lambda pages, partitions: s1.extract_documents(pages, partitions)),
+    # chunks carry their embeddings: this table IS the vector index (the
+    # reference's persisted VectorStoreIndex, SURVEY §1.3) — query it with
+    # operators/retrieval.search_index
+    _Stage("stage1_chunk", "chunks", "url", "row",
+           lambda documents: chunks_with_embeddings(documents)),
+    _Stage("stage1_quarantine", "quarantine", "url", "row",
+           lambda documents: s1.quarantine(documents)),
+    _Stage("stage2_mentions", "mentions", "url", "row",
+           lambda documents: s2.detect_mentions(documents)),
+    _Stage("stage2_linked", "linked_mentions", "url", "row",
+           lambda mentions, alias_bc: s2.link_mentions(mentions, alias_bc)),
+    _Stage("stage3_raw_triples", "raw_triples", "url", "row",
+           lambda documents: s3.extract_raw_triples(documents)),
+    # canonicalization is a global fixpoint: a changed page can merge or
+    # split entity clusters corpus-wide
+    _Stage("stage3_canon", "canon_map", "norm", "global", _canon_from_linked),
+    _Stage("stage3_triples", "triples", "url", "global", _build_triples),
+    _Stage("stage4_nodes", "nodes", "canon_id", "global", _build_nodes),
+    _Stage("stage4_edges", "edges", "subj_canon_id", "global", _build_edges),
+    # every resolved href of the extractable pages: a function of each page
+    _Stage("stage5_outlinks", "outlinks", "url", "row",
+           lambda pages: g.extract_outlinks(pages, strict_utf8=True)
+           .withColumnRenamed("src", "url"), link_graph=True),
+    # global like triples: a new page can turn an old page's dead link into
+    # an edge
+    _Stage("stage5_web_edges", "web_edges", "src", "global", _build_web_edges,
+           link_graph=True),
+    # rank rounded to 6dp so the stored table is reproducible across
+    # partitionings
+    _Stage("stage5_web_rank", "web_rank", "node", "global", _build_web_rank,
+           link_graph=True),
+    _Stage("stage5_web_anchors", "web_anchors", "url", "row",
+           lambda pages: g.anchor_edges(pages, strict_utf8=True)
+           .withColumnRenamed("src", "url"), link_graph=True),
+    _Stage("stage5_web_aliases", "web_aliases", "dst", "global",
+           _build_web_aliases, link_graph=True),
+)
+
+
+def _stages(link_graph: bool) -> list[_Stage]:
+    return [s for s in _STAGES if link_graph or not s.link_graph]
+
+
+def _returned(tables: dict, stages: list[_Stage]) -> dict[str, DataFrame]:
+    """The stages' tables by name; ``linked_mentions`` is returned as
+    ``linked``."""
+    return {
+        "linked" if s.table == "linked_mentions" else s.table: tables[s.table]
+        for s in stages
+    }
 
 
 def _convert_legacy_lineage(store: TableStore) -> None:
@@ -67,17 +219,18 @@ def _convert_legacy_lineage(store: TableStore) -> None:
         return
     if not old:
         return
+    keys = {s.table: s.key for s in _STAGES}
     writer = {}  # table -> the stage that wrote it last
     stages = store.manifest()["stages"]
     for stage, entry in sorted(
         stages.items(), key=lambda kv: kv[1].get("completed_at", 0)
     ):
-        if entry.get("table") in _LINEAGE_KEYS:
+        if entry.get("table") in keys:
             writer[entry["table"]] = stage
     for table, stage in writer.items():
         if os.path.isdir(store.path(table)):
             record_lineage(store.path(table), lineage_dir, table, stage,
-                           _LINEAGE_KEYS[table])
+                           keys[table])
     for name in old:
         os.remove(os.path.join(lineage_dir, name))
 
@@ -115,6 +268,13 @@ def _materialize(
     return out
 
 
+def _run_inputs(spark, aliases, partitions, pagerank_iters) -> dict:
+    """The run's inputs, other than ``pages``, that a builder may name."""
+    return {"aliases": aliases,
+            "alias_bc": s2.build_alias_broadcast(spark, aliases),
+            "partitions": partitions, "pagerank_iters": pagerank_iters}
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -141,119 +301,19 @@ def run_pipeline(
     web_anchors, the corpus-derived alias-candidate dictionary)."""
     store = TableStore(out_dir)
     _convert_legacy_lineage(store)
-
-    documents = _materialize(
-        store, spark, "stage1_extract", "documents", fingerprint,
-        lambda: s1.extract_documents(pages, partitions), "url", resume,
-    )
-    # chunks carry their embeddings: this table IS the vector index
-    # (the reference's persisted VectorStoreIndex, SURVEY §1.3) — query it
-    # with operators/retrieval.search_index
-    from ..operators.retrieval import chunks_with_embeddings
-
-    chunks = _materialize(
-        store, spark, "stage1_chunk", "chunks", fingerprint,
-        lambda: chunks_with_embeddings(documents), "url", resume,
-    )
-    quarantined = _materialize(
-        store, spark, "stage1_quarantine", "quarantine", fingerprint,
-        lambda: s1.quarantine(documents), "url", resume,
-    )
-
-    alias_bc = s2.build_alias_broadcast(spark, aliases)
-    mentions = _materialize(
-        store, spark, "stage2_mentions", "mentions", fingerprint,
-        lambda: s2.detect_mentions(documents), "url", resume,
-    )
-    linked = _materialize(
-        store, spark, "stage2_linked", "linked_mentions", fingerprint,
-        lambda: s2.link_mentions(mentions, alias_bc), "url", resume,
-    )
-
-    raw_triples = _materialize(
-        store, spark, "stage3_raw_triples", "raw_triples", fingerprint,
-        lambda: s3.extract_raw_triples(documents), "url", resume,
-    )
-    # canonicalize over dictionary aliases ∪ linked mention surfaces
-    canon = _materialize(
-        store, spark, "stage3_canon", "canon_map", fingerprint,
-        lambda: _canon_from_linked(aliases, linked), "norm", resume,
-    )
-
-    triples = _materialize(
-        store, spark, "stage3_triples", "triples", fingerprint,
-        lambda: s3.canonical_triples(
-            raw_triples, s3.linked_surfaces(linked), canon
-        ),
-        "url", resume,
-    )
-
-    nodes = _materialize(
-        store, spark, "stage4_nodes", "nodes", fingerprint,
-        lambda: _build_nodes(triples), "canon_id", resume,
-    )
-    edges = _materialize(
-        store, spark, "stage4_edges", "edges", fingerprint,
-        lambda: _build_edges(triples), "subj_canon_id", resume,
-    )
-
-    out = {
-        "documents": documents,
-        "chunks": chunks,
-        "quarantine": quarantined,
-        "mentions": mentions,
-        "linked": linked,
-        "raw_triples": raw_triples,
-        "canon_map": canon,
-        "triples": triples,
-        "nodes": nodes,
-        "edges": edges,
-    }
-
-    if link_graph:
-        from ..operators import graph as g
-
-        outlinks = _materialize(
-            store, spark, "stage5_outlinks", "outlinks", fingerprint,
-            lambda: g.extract_outlinks(pages, strict_utf8=True)
-            .withColumnRenamed("src", "url"),
-            "url", resume,
+    tables = {"pages": pages,
+              **_run_inputs(spark, aliases, partitions, pagerank_iters)}
+    stages = _stages(link_graph)
+    for s in stages:
+        tables[s.table] = _materialize(
+            store, spark, s.name, s.table, fingerprint,
+            partial(s.run, tables), s.key, resume,
         )
-        web_edges = _materialize(
-            store, spark, "stage5_web_edges", "web_edges", fingerprint,
-            lambda: _build_web_edges(outlinks, documents), "src", resume,
-        )
-        out["outlinks"] = outlinks
-        out["web_edges"] = web_edges
-        out["web_rank"] = _materialize(
-            store, spark, "stage5_web_rank", "web_rank", fingerprint,
-            lambda: _build_web_rank(web_edges, pagerank_iters), "node", resume,
-        )
-        web_anchors = _materialize(
-            store, spark, "stage5_web_anchors", "web_anchors", fingerprint,
-            lambda: g.anchor_edges(pages, strict_utf8=True)
-            .withColumnRenamed("src", "url"),
-            "url", resume,
-        )
-        out["web_anchors"] = web_anchors
-        out["web_aliases"] = _materialize(
-            store, spark, "stage5_web_aliases", "web_aliases", fingerprint,
-            lambda: _build_web_aliases(web_anchors), "dst", resume,
-        )
-
+    out = _returned(tables, stages)
     out["lineage"] = spark.read.schema(LINEAGE_SCHEMA).parquet(
         store.path("lineage")
     )
     return out
-
-
-def _canon_from_linked(aliases: DataFrame, linked: DataFrame) -> DataFrame:
-    """canon_map over dictionary aliases ∪ linked mention surfaces."""
-    surfaces = aliases.select(F.col("alias").alias("s")).unionByName(
-        linked.select(F.col("surface").alias("s"))
-    )
-    surfaces = canon_ops.normalize_column(surfaces.distinct(), "s").distinct()
-    return canon_ops.canon_map(surfaces)
 
 
 def apply_increment(
@@ -269,21 +329,27 @@ def apply_increment(
 ) -> dict[str, DataFrame]:
     """Apply a new page snapshot to an existing materialized pipeline state —
     the reference's incremental reindex (index.py:1491-1585: classify vs the
-    ledger, delete removed files' docs, re-ingest changed ones) distributed:
+    ledger, delete removed files' docs, re-ingest changed ones) distributed.
+    It walks the same stage list as ``run_pipeline``, row-level stages
+    first:
 
       1. one full-outer ``change_log`` of the snapshot's content hashes vs
          the documents table (the ledger analog — content_md5 is stored
          per url at extract time);
-      2. the expensive stage-1/2/3 Python UDFs run ONLY on the frontier
-         (new ∪ modified pages);
-      3. row-level tables (documents/chunks/quarantine/mentions/linked/
-         raw_triples) are maintained by url: anti-join out stale ∪ deleted
-         urls, union the freshly extracted rows;
-      4. corpus-GLOBAL tables (canon_map, triples, nodes, edges) are rebuilt
-         from the maintained inputs — canonicalization is a global fixpoint
-         (a changed page can merge/split entity clusters corpus-wide), so
-         recomputing it from the dictionary-sized surface set is the correct
-         and cheap choice at any scale.
+      2. each row-level stage (documents/chunks/quarantine/mentions/linked/
+         raw_triples, and outlinks/web_anchors) is built ONLY over the
+         frontier (new ∪ modified pages), so the expensive stage-1/2/3
+         Python UDFs see nothing else; a fresh relation a later row-level
+         stage reads is persisted, so its UDF runs once;
+      3. the row-level table is maintained by url: anti-join out stale ∪
+         deleted urls, union the fresh rows. A row-level table the state
+         lacks (e.g. ``link_graph`` turned on after the build) is built
+         from the full snapshot;
+      4. each corpus-GLOBAL stage (canon_map, triples, nodes, edges, and
+         web_edges/web_rank/web_aliases) is rebuilt from the read-backs of
+         the maintained tables — canonicalization is a global fixpoint, so
+         recomputing it from the dictionary-sized surface set is the
+         correct and cheap choice at any scale.
 
     Every replaced table's lineage file is rewritten from its new footers
     under stage ``incr_<table>`` (the manifest's name for the step), so
@@ -296,12 +362,25 @@ def apply_increment(
     is a batch of new/re-crawled pages rather than a complete snapshot, so
     absence proves nothing and no rows are deleted — the mode used by the
     streaming maintenance surface (streaming.ingest
-    .start_incremental_maintenance), where each micro-batch is a delta."""
+    .start_incremental_maintenance), where each micro-batch is a delta. A
+    delta cannot build a missing row-level table, so that raises
+    ``ValueError``."""
     from ..operators import incremental as incr
-    from ..operators.retrieval import chunks_with_embeddings
 
     store = TableStore(out_dir)
     _convert_legacy_lineage(store)
+    # all row-level tables swap before the global rebuild, which reads only
+    # the maintained tables and so can always be redone
+    stages = sorted(_stages(link_graph), key=lambda s: s.role != "row")
+    missing = {s.table for s in stages
+               if s.role == "row" and not store.exists(s.table, spark)}
+    if missing and not delete_missing:
+        raise ValueError(
+            "delta mode cannot build the missing table(s) "
+            f"{', '.join(sorted(missing))} from a partial batch — run "
+            f"run_pipeline(..., link_graph={link_graph}) once over the full "
+            "corpus first"
+        )
     old_docs = store.read(spark, "documents")
     snap = incr.with_content_hash(new_pages)
     log = incr.change_log(
@@ -316,197 +395,35 @@ def apply_increment(
     gone_classes = ["modified", "deleted"] if delete_missing else ["modified"]
     gone_urls = log.where(F.col("change").isin(*gone_classes)).select("url")
 
+    inputs = _run_inputs(spark, aliases, partitions, pagerank_iters)
     frontier_pages = new_pages.join(frontier_urls, "url", "left_semi")
-    from pyspark import StorageLevel
-
-    # persisted: feeds documents/chunks/mentions/raw_triples — without it the
-    # Python extract would re-run once per consumer
-    fresh_docs = s1.extract_documents(frontier_pages, partitions).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
+    fresh = {**inputs, "pages": frontier_pages}
+    full = {**inputs, "pages": new_pages}  # + each table read back post-swap
+    reread = {n for s in stages if s.role == "row" for n in s.inputs}
+    persisted = []
     try:
-
-        def maintain(table: str, fresh: DataFrame) -> DataFrame:
-            kept = store.read(spark, table).join(gone_urls, "url", "left_anti")
-            return kept.unionByName(fresh)
-
-        documents = maintain("documents", fresh_docs)
-        chunks = maintain("chunks", chunks_with_embeddings(fresh_docs))
-        quarantined = maintain("quarantine", s1.quarantine(fresh_docs))
-        fresh_mentions = s2.detect_mentions(fresh_docs)
-        mentions = maintain("mentions", fresh_mentions)
-        alias_bc = s2.build_alias_broadcast(spark, aliases)
-        linked = maintain(
-            "linked_mentions", s2.link_mentions(fresh_mentions, alias_bc)
-        )
-        raw_triples = maintain("raw_triples", s3.extract_raw_triples(fresh_docs))
-
-        row_level = [
-            ("documents", documents),
-            ("chunks", chunks),
-            ("quarantine", quarantined),
-            ("mentions", mentions),
-            ("linked_mentions", linked),
-            ("raw_triples", raw_triples),
-        ]
-        if link_graph:
-            from ..operators import graph as g
-
-            if store.exists("outlinks", spark):
-                fresh_links = g.extract_outlinks(
-                    frontier_pages, strict_utf8=True
-                ).withColumnRenamed("src", "url")
-                out_links = maintain("outlinks", fresh_links)
-            elif delete_missing:
-                # state predates the link-graph stage; a full snapshot can
-                # bootstrap the table from scratch (a frontier alone cannot
-                # — unchanged pages' links would be missing)
-                out_links = g.extract_outlinks(
-                    new_pages, strict_utf8=True
-                ).withColumnRenamed("src", "url")
+        for s in stages:
+            if s.role == "row":
+                df = fresh[s.table] = s.run(fresh)
+                if s.table in reread:
+                    persisted.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+            if s.role == "global" or s.table in missing:
+                df = s.run(full)
             else:
-                raise ValueError(
-                    "link_graph=True but no materialized 'outlinks' table, "
-                    "and delta mode cannot bootstrap it from a partial "
-                    "batch — run run_pipeline(..., link_graph=True) once "
-                    "over the full corpus first"
+                kept = store.read(spark, s.table).join(
+                    gone_urls, "url", "left_anti"
                 )
-            row_level.append(("outlinks", out_links))
-            if store.exists("web_anchors", spark):
-                anchors_tab = maintain(
-                    "web_anchors",
-                    g.anchor_edges(frontier_pages, strict_utf8=True)
-                    .withColumnRenamed("src", "url"),
-                )
-            elif delete_missing:
-                anchors_tab = g.anchor_edges(
-                    new_pages, strict_utf8=True
-                ).withColumnRenamed("src", "url")
-            else:
-                raise ValueError(
-                    "link_graph=True but no materialized 'web_anchors' "
-                    "table, and delta mode cannot bootstrap it from a "
-                    "partial batch — run run_pipeline(..., "
-                    "link_graph=True) once over the full corpus first"
-                )
-            row_level.append(("web_anchors", anchors_tab))
-
-        # row-level tables replace in dependency order (replace() stages to a
-        # side dir first, so the old contents feeding the plans stay readable)
-        for name, df in row_level:
-            store.replace(df, name)
-            record_lineage(store.path(name), store.path("lineage"), name,
-                           f"incr_{name}", _LINEAGE_KEYS[name])
-            store.mark_complete(f"incr_{name}", fingerprint, table=name)
+                df = kept.unionByName(df)
+            # replace() stages to a side dir first, so the old contents
+            # feeding the plan stay readable
+            store.replace(df, s.table)
+            record_lineage(store.path(s.table), store.path("lineage"),
+                           s.table, f"incr_{s.table}", s.key)
+            store.mark_complete(f"incr_{s.table}", fingerprint, table=s.table)
+            full[s.table] = store.read(spark, s.table)
     finally:
-        # every consumer has materialized by the last replace(); without this
-        # the streaming surface (one apply_increment per micro-batch) would
-        # accumulate one cached extract per batch in the CacheManager
-        fresh_docs.unpersist()
-
-    # global rebuild from the maintained tables (read back post-swap)
-    linked_v2 = store.read(spark, "linked_mentions")
-    raw_v2 = store.read(spark, "raw_triples")
-    canon = _canon_from_linked(aliases, linked_v2)
-    store.replace(canon, "canon_map")
-    canon_v2 = store.read(spark, "canon_map")
-    triples = s3.canonical_triples(raw_v2, s3.linked_surfaces(linked_v2), canon_v2)
-    store.replace(triples, "triples")
-    triples_v2 = store.read(spark, "triples")
-    store.replace(_build_nodes(triples_v2), "nodes")
-    store.replace(_build_edges(triples_v2), "edges")
-    global_tables = ["canon_map", "triples", "nodes", "edges"]
-    if link_graph:
-        # web_edges/web_rank are global like triples: a frontier page can
-        # validate an old page's previously-dead link, so rebuild from the
-        # maintained outlinks + documents tables
-        outlinks_v2 = store.read(spark, "outlinks")
-        docs_v2 = store.read(spark, "documents")
-        store.replace(_build_web_edges(outlinks_v2, docs_v2), "web_edges")
-        web_edges_v2 = store.read(spark, "web_edges")
-        store.replace(_build_web_rank(web_edges_v2, pagerank_iters), "web_rank")
-        anchors_v2 = store.read(spark, "web_anchors")
-        store.replace(_build_web_aliases(anchors_v2), "web_aliases")
-        global_tables += ["web_edges", "web_rank", "web_aliases"]
-    for name in global_tables:
-        record_lineage(store.path(name), store.path("lineage"), name,
-                       f"incr_{name}", _LINEAGE_KEYS[name])
-        store.mark_complete(f"incr_{name}", fingerprint, table=name)
-
-    names = [
-        "documents", "chunks", "quarantine", "mentions",
-        "raw_triples", "canon_map", "triples", "nodes", "edges",
-    ]
-    if link_graph:
-        names += ["outlinks", "web_edges", "web_rank", "web_anchors",
-                  "web_aliases"]
-    out = {name: store.read(spark, name) for name in names}
-    out["linked"] = store.read(spark, "linked_mentions")  # run_pipeline's key
-    return out
-
-
-def _build_web_edges(outlinks: DataFrame, documents: DataFrame) -> DataFrame:
-    """Intra-crawl edges: outlinks whose target is a crawled url (the
-    documents table carries every crawled url, quarantined or not). Shares
-    graph.restrict_to_targets with the bench's crawl_edges path, so the
-    measured operator and the materialized table cannot drift apart."""
-    from ..operators.graph import restrict_to_targets
-
-    return restrict_to_targets(
-        outlinks.select(F.col("url").alias("src"), "dst"),
-        documents.select("url"),
-    )
-
-
-def _build_web_aliases(web_anchors: DataFrame, k: int = 3) -> DataFrame:
-    """Anchor-text alias candidates: top-k anchors per target url
-    (graph.alias_candidates over the row-level web_anchors table). The
-    corpus-derived complement of the broadcast alias dictionary —
-    candidate surface forms for entities whose home urls the crawl links
-    to. Unlike web_edges this is NOT restricted to crawled urls: the whole
-    point is naming things the crawl points AT (kb-style targets)."""
-    from ..operators.graph import alias_candidates
-
-    return alias_candidates(
-        web_anchors.withColumnRenamed("url", "src"), k=k
-    )
-
-
-def _build_web_rank(web_edges: DataFrame, iters: int) -> DataFrame:
-    from ..operators import graph as g
-
-    ranks = g.pagerank(web_edges, iters=iters)
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
-
-
-def _build_nodes(triples: DataFrame) -> DataFrame:
-    """Distinct canonical entities with mention statistics."""
-    subj = triples.select(
-        F.col("subj_canon_id").alias("canon_id"),
-        F.col("subj_canon").alias("canon_surface"),
-        F.col("url"),
-    )
-    obj = triples.select(
-        F.col("obj_canon_id").alias("canon_id"),
-        F.col("obj_canon").alias("canon_surface"),
-        F.col("url"),
-    )
-    return (
-        subj.unionByName(obj)
-        .groupBy("canon_id", "canon_surface")
-        .agg(
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.countDistinct("url").alias("n_urls"),
-        )
-    )
-
-
-def _build_edges(triples: DataFrame) -> DataFrame:
-    """Aggregated edge table with support counts."""
-    return triples.groupBy(
-        "subj_canon_id", "subj_canon", "pred", "obj_canon_id", "obj_canon"
-    ).agg(
-        F.count(F.lit(1)).alias("support"),
-        F.countDistinct("url").alias("n_urls"),
-    )
+        # the streaming surface runs one apply_increment per micro-batch:
+        # without this the CacheManager would keep every batch's extract
+        for df in persisted:
+            df.unpersist()
+    return _returned(full, stages)

@@ -339,9 +339,17 @@ class TestRedundantDistinctElision:
         )
         assert _run(got_df) == want
         kwargs["select"] = ["a", "b", "v", "m"]
-        want_all = _run(bgp_match(triples, **kwargs))
+        kept_all = bgp_match(triples, **kwargs)
         got_all = bgp_match(triples, input_distinct=True, **kwargs)
-        assert _run(got_all) == want_all
+        # select now covers every variable: the elision must fire. The
+        # VALUES table and the MINUS scan keep their own distincts, so the
+        # elided plan holds exactly one Aggregate fewer.
+        n_agg = lambda df: (
+            df._jdf.queryExecution().optimizedPlan().toString()
+            .count("Aggregate")
+        )
+        assert n_agg(got_all) == n_agg(kept_all) - 1
+        assert _run(got_all) == _run(kept_all)
 
     def test_projection_still_deduplicates(self, triples):
         # select drops ?v -> projections of a set are a bag, so the
@@ -370,3 +378,25 @@ class TestRedundantDistinctElision:
             (2, 2),
             (3, 3),
         ]
+
+
+@pytest.mark.parametrize(
+    "query", ["kg_bgp_match", "kg_bgp_optional", "kg_bgp_filter"]
+)
+def test_entry_claims_are_distinct(spark, sf_dir, monkeypatch, query):
+    """input_distinct=True is the caller's promise that the claims relation
+    has no duplicate rows; the entry queries that make it keep it."""
+    import __spark_entry__ as em
+    from chunksilo_spark.operators import bgp
+
+    calls = []
+
+    def recording(triples, *args, **kwargs):
+        calls.append((triples, kwargs.get("input_distinct", False)))
+        return bgp_match(triples, *args, **kwargs)
+
+    monkeypatch.setattr(bgp, "bgp_match", recording)
+    em.queries()[query](spark, sf_dir)
+    assert [flag for _, flag in calls] == [True]
+    claims = calls[0][0]
+    assert claims.count() == claims.distinct().count() > 0

@@ -478,6 +478,14 @@ class TestLinkGraphPipeline:
         # the increment actually changed the graph (pages 40..59 add edges)
         e2 = inc["web_edges"].count()
         assert e2 > e1
+        # lineage describes the refreshed link-graph tables, not the build's
+        import pyarrow.parquet as pq
+
+        for table in ("outlinks", "web_edges", "web_rank",
+                      "web_anchors", "web_aliases"):
+            lin = pq.read_table(f"{state}/lineage/{table}.parquet").to_pylist()
+            assert {r["stage"] for r in lin} == {f"incr_{table}"}, table
+            assert sum(r["n_rows"] for r in lin) == inc[table].count(), table
 
 
 class TestWeakComponents:

@@ -186,6 +186,44 @@ class TestApplyIncrement:
             b = sorted((tuple(r) for r in want[table].collect()), key=repr)
             assert a == b, table
 
+    def test_refresh_detects_mentions_once(self, spark, tmp_path, monkeypatch):
+        """The fresh mentions feed both the mentions table and the linker:
+        the Python mention detector must run over the frontier once, not
+        once per consumer. A pass-through mapInPandas after the detector
+        counts every row it emits."""
+        from chunksilo_spark.operators import stage2_link as s2
+        from chunksilo_spark.plans.pipeline import apply_increment, run_pipeline
+        from chunksilo_spark.sources.corpus import aliases_df
+
+        aliases = aliases_df(spark)
+        state = str(tmp_path / "s")
+        run_pipeline(
+            spark, pages_df(spark, 40, partitions=2), aliases, state,
+            fingerprint="v1",
+        )
+        before = spark.read.parquet(f"{state}/mentions").count()
+
+        seen = spark.sparkContext.accumulator(0)
+        detect = s2.detect_mentions
+
+        def counting(documents):
+            def count(batches):
+                for b in batches:
+                    seen.add(len(b))
+                    yield b
+
+            out = detect(documents)
+            return out.mapInPandas(count, out.schema)
+
+        monkeypatch.setattr(s2, "detect_mentions", counting)
+        got = apply_increment(
+            spark, pages_df(spark, 60, partitions=2), aliases, state,
+            fingerprint="v2",
+        )
+        added = got["mentions"].count() - before
+        assert added > 0
+        assert seen.value == added
+
 
 class TestExtractGuards:
     def test_oversized_html_quarantined(self, spark):
