@@ -32,6 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..session import local_frame
 
 __all__ = ["bgp_match"]
 
@@ -47,6 +50,34 @@ def _var_name(term: str) -> str:
     if not name:
         raise ValueError("empty variable name '?' in BGP pattern")
     return name
+
+
+def _values_frame(acc: DataFrame, vnames: list[str], rows) -> DataFrame:
+    """VALUES rows -> an inline relation typed as ``acc``'s columns of
+    the same names (nullable, like any binding). Every cell must convert
+    to its column's type and back unchanged: Arrow would truncate 1.5 to
+    1 for a ``long``, and a VALUES row must match exactly what it names."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = StructType(
+        [StructField(v, acc.schema[v].dataType, True) for v in vnames]
+    )
+    rows = [tuple(r) for r in rows]
+    if any(len(r) != len(vnames) for r in rows):
+        raise ValueError(f"VALUES rows must each bind {vnames!r}")
+    for field, cells in zip(schema, zip(*rows)):
+        try:
+            arr = pa.array(cells, type=to_arrow_type(field.dataType))
+            exact = arr.to_pylist() == list(cells)
+        except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+            exact = False
+        if not exact:
+            raise ValueError(
+                f"VALUES ?{field.name}: {list(cells)!r} do not all fit the "
+                f"bound column's type {field.dataType.simpleString()}"
+            )
+    return local_frame(acc.sparkSession, rows, schema)
 
 
 def _pattern_scan(triples: DataFrame, pattern, cols) -> tuple[DataFrame, list[str]]:
@@ -130,7 +161,11 @@ def bgp_match(
     driver-literal and tiny by construction, so Spark broadcasts it — at
     100 TB this is the "restrict the query to this entity list" fast
     path (the list prunes the join tree instead of filtering at the
-    end). Variables must all be bound by the required patterns.
+    end). Variables must all be bound by the required patterns. Each
+    VALUES column takes the type of the bound column it joins; a value
+    that type cannot hold exactly (a string or 1.5 for a ``long``, a
+    bool for a number) raises ``ValueError``, so no implicit cast
+    decides what a VALUES row matches.
 
     Bag semantics by default (each distinct derivation is a row, the
     SPARQL default); ``distinct=True`` for set semantics (applied after
@@ -204,9 +239,7 @@ def bgp_match(
             )
         if not values[1]:
             raise ValueError("VALUES with an empty binding list")
-        inline = acc.sparkSession.createDataFrame(
-            [tuple(r) for r in values[1]], schema=vnames
-        ).distinct()
+        inline = _values_frame(acc, vnames, values[1]).distinct()
         acc = acc.join(F.broadcast(inline), on=vnames, how="inner")
 
     for opt in optional or []:

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from ..checkpointing import cut_lineage
 from ..functions.hashing import hash64
 from ..functions.minhash import band_keys, jaccard, minhash_signatures_batch
+from ..session import local_frame
 
 JACCARD_THRESHOLD = 0.6
 
@@ -171,12 +172,8 @@ def connected_components(
     pdf = edges.limit(SMALL_GRAPH_THRESHOLD + 1).toPandas()
     if len(pdf) <= SMALL_GRAPH_THRESHOLD:
         roots = union_find_min(zip(pdf["a"].tolist(), pdf["b"].tolist()))
-        labels = edges.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {"nid": list(roots), "component": list(roots.values())},
-                dtype="int64",
-            ),
-            schema="nid long, component long",
+        labels = local_frame(
+            edges.sparkSession, roots.items(), "nid long, component long"
         )
     else:
         from .graph import components_starstar
@@ -195,15 +192,19 @@ def canon_map_local(
 ) -> DataFrame:
     """Driver-side canon for dictionary-sized surface sets (< ~200k): the
     exact same LSH + verify + union-find semantics (it IS the test oracle,
-    plans/oracle.py), one collect + one createDataFrame instead of ~8 tiny
-    distributed jobs. canon_map() auto-dispatches here below the threshold —
-    the standard small-graph fast path (GraphFrames does the same)."""
+    plans/oracle.py), computed on the driver and handed to Spark as one
+    Arrow local relation (:func:`session.local_frame`) instead of ~8 tiny
+    distributed jobs. Reading the map runs no Python worker, and its size
+    statistics let joins plan it as a broadcast up front.
+    canon_map() auto-dispatches here below the threshold — the standard
+    small-graph fast path (GraphFrames does the same)."""
     from ..plans.oracle import oracle_canon_map
 
     cmap = oracle_canon_map(set(norms), threshold)
-    rows = [(n, cid, csurf) for n, (cid, csurf) in cmap.items()]
-    return spark.createDataFrame(
-        rows, schema="norm string, canon_id long, canon_surface string"
+    return local_frame(
+        spark,
+        ((n, cid, csurf) for n, (cid, csurf) in cmap.items()),
+        "norm string, canon_id long, canon_surface string",
     )
 
 
@@ -305,8 +306,8 @@ def blocking_metrics(
     n_cand = cands.count()
     n_cov = tp.join(cands, ["norm_a", "norm_b"], "left_semi").count()
     all_pairs = n * (n - 1) // 2
-    spark = surfaces.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        surfaces.sparkSession,
         [(
             n, n_cand, n_true, n_cov,
             round(1.0 - (n_cand / all_pairs), 6) if all_pairs else 1.0,

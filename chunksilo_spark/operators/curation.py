@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..checkpointing import cut_lineage
 from ..functions.textstats import ws_tokens_clean
+from ..session import local_frame
 
 # simple, portable patterns (Java regex on the Spark side, RE2 in the
 # DuckDB oracle — the subset used here behaves identically in both)
@@ -947,9 +948,9 @@ def mix_to_target(
     """
     if not targets or any(t <= 0 for t in targets.values()):
         raise ValueError("targets must be a non-empty dict of positive fracs")
-    spark = docs.sparkSession
-    tdf = spark.createDataFrame(
-        sorted(targets.items()), f"{domain_col} string, _t double"
+    tdf = local_frame(
+        docs.sparkSession, sorted(targets.items()),
+        f"{domain_col} string, _t double",
     )
     counts = docs.groupBy(domain_col).agg(F.count(F.lit(1)).alias("_n"))
     rates = counts.join(F.broadcast(tdf), domain_col)

@@ -4,8 +4,10 @@ The staged pipeline (plans/pipeline.py) materializes documents, mentions and
 raw triples separately — right for resumable production runs. This fused
 operator is the throughput-optimal execution mode: the corpus flows through
 Python exactly once (no intermediate persist of corpus-sized data), emitting
-only linked surface triples (~20x smaller than documents). Canonicalization
-then runs over the distinct normalized surfaces of this output and the final
+only linked surface triples (~20x smaller than documents). This pass is the
+only Python the fused build runs: the distinct normalized surfaces of its
+output are a JVM aggregate (:func:`distinct_norms`), canonicalization of that
+dictionary-sized set enters Spark as an Arrow local relation, and the final
 canon rewrite is a broadcast join.
 
 Semantics are EXACTLY the composed path, because the kernels are shared,
@@ -106,21 +108,14 @@ def fused_linked_triples(
 
 
 def distinct_norms(fused: DataFrame) -> DataFrame:
-    """Distinct subj/obj norms of the fused triples, shuffle-light: each
-    Arrow batch emits only its unique norms (dictionary-sized), so the
-    global distinct shuffles ~|batches|x|dictionary| rows instead of 2x the
-    triple count."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            uniq = set(pdf["subj_norm"]) | set(pdf["obj_norm"])
-            yield pd.DataFrame({"norm": sorted(uniq)})
-
-    return (
-        fused.select("subj_norm", "obj_norm")
-        .mapInPandas(run, schema="norm string")
-        .distinct()
-    )
+    """Distinct subj/obj norms of the fused triples -> (norm string), a
+    JVM hash aggregate with no Python pass: its map-side combine already
+    emits each partition's unique norms (dictionary-sized), so the
+    exchange carries ~|partitions|x|dictionary| rows, not 2x the triple
+    count."""
+    return fused.select(
+        F.explode(F.array("subj_norm", "obj_norm")).alias("norm")
+    ).distinct()
 
 
 def canonical_from_fused(

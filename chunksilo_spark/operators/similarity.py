@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 _PLANES_SEED = 42
 N_PLANES = 16
 
@@ -139,8 +141,9 @@ def ivf_topk(
         .collect()
     )
     if not sample_rows_data:  # empty corpus -> empty result, same schema
-        return vectors.sparkSession.createDataFrame(
-            [], schema="query_id long, neighbor_id long, cosine double, rank int"
+        return local_frame(
+            vectors.sparkSession, [],
+            "query_id long, neighbor_id long, cosine double, rank int",
         )
     sample = np.array(
         [list(r[1]) for r in sample_rows_data],
@@ -191,8 +194,8 @@ def ivf_topk(
         order = np.argsort(-(cents @ qv))[:n_probe]
         for lid in order:
             q_probe.append((int(r[0]), int(lid)))
-    probes = vectors.sparkSession.createDataFrame(
-        q_probe, schema="query_id long, list_id int"
+    probes = local_frame(
+        vectors.sparkSession, q_probe, "query_id long, list_id int"
     )
     cand_ids = (
         assigned.join(F.broadcast(probes), "list_id")

@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from ..checkpointing import cut_lineage
 from ..functions.textstats import ws_tokens_clean
+from ..session import local_frame
 
 __all__ = [
     "bpe_train",
@@ -167,8 +168,9 @@ def bpe_train(
         pat = _O + left + _C + _O + right + _C
         rep = _O + left + right + _C
         seq = F.replace(seq, F.lit(pat), F.lit(rep))
-    return spark.createDataFrame(
-        merges, schema="merge_rank int, left string, right string, pair_count long"
+    return local_frame(
+        spark, merges,
+        "merge_rank int, left string, right string, pair_count long",
     )
 
 
@@ -256,9 +258,7 @@ def bpe_vocab(
     n_chars = cid.count()
     mrows = [(left + right, n_chars + i) for i, (left, right) in enumerate(merges)]
     if mrows:
-        mdf = df.sparkSession.createDataFrame(
-            mrows, "token string, token_id long"
-        )
+        mdf = local_frame(df.sparkSession, mrows, "token string, token_id long")
         cid = cid.unionByName(mdf)
     return cid.groupBy("token").agg(F.min("token_id").alias("token_id"))
 

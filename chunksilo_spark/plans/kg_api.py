@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators import graph as _graph
 from ..operators.bgp import bgp_match
+from ..session import local_frame
 
 __all__ = [
     "entity_lookup",
@@ -143,9 +144,9 @@ def related_entities(
             F.col("support").alias("w"),
         )
     )
-    spark = edges.sparkSession
-    seeds = spark.createDataFrame(
-        [(int(s), 1.0) for s in seed_ids], "node long, weight double"
+    seeds = local_frame(
+        edges.sparkSession,
+        [(int(s), 1.0) for s in seed_ids], "node long, weight double",
     )
     # evidence-weighted walk: rank follows attestation, not edge count
     ranks = _graph.personalized_pagerank(

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # one BLAS thread per Python worker: parallelism comes from Spark tasks;
 # nested OMP threading just fights the other workers for the same cores
@@ -46,6 +46,31 @@ def package_zip() -> str:
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     z.write(full, rel)
     return out
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side rows -> a DataFrame over a ``LocalRelation``.
+
+    ``rows`` is an iterable of tuples in ``schema`` order; ``schema`` is a
+    DDL string or a ``StructType`` and fixes every column's type and
+    nullability. The rows become one ``pyarrow.Table`` that Spark reads
+    as a local relation: it carries size statistics (so joins can plan it
+    as a broadcast up front) and reading it runs no Python worker. A
+    Python list handed to ``createDataFrame`` instead becomes a pickled
+    ``PythonRDD``, and every read of it runs one Python task per
+    ``spark.default.parallelism`` slice. A value that Arrow cannot convert
+    to its column's type raises here, not at read time.
+    The package's one ``createDataFrame`` call site."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def _conf(parallel: int) -> dict[str, str]:

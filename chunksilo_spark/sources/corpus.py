@@ -342,6 +342,7 @@ def pages_df(spark, n_pages: int, partitions: int | None = None):
 def aliases_df(spark):
     """Broadcast-sized alias dictionary with BoW embeddings (FIXTURES §2)."""
     from ..functions.embed import bow_embed
+    from ..session import local_frame
 
     pool = build_entity_pool()
     rows = [
@@ -349,8 +350,8 @@ def aliases_df(spark):
         for eid, aliases in enumerate(pool)
         for alias in aliases
     ]
-    return spark.createDataFrame(
-        rows, schema="entity_id long, alias string, embedding array<float>"
+    return local_frame(
+        spark, rows, "entity_id long, alias string, embedding array<float>"
     )
 
 

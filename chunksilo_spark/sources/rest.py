@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..models import ModelSpec
+from ..session import local_frame
 
 PAGES_REST_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
@@ -92,8 +93,8 @@ def fetch_pages(
     """
     import pandas as pd
 
-    unit_df = spark.createDataFrame(
-        [(u,) for u in units], "unit string"
+    unit_df = local_frame(
+        spark, [(u,) for u in units], "unit string"
     ).repartition(max(1, min(len(units), 32)))
 
     def page_df(unit, rows: list) -> "pd.DataFrame":

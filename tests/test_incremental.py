@@ -161,10 +161,12 @@ class TestApplyIncrement:
         _assert_lineage_is_current(spark, incr_dir)
 
     def test_apply_after_kill_is_rerunnable(self, spark, tmp_path):
-        """Killing between the row-level swap and the global rebuild, then
-        re-running apply_increment, still converges to the from-scratch
-        result (replace() is idempotent per table; re-applying an
-        already-applied snapshot is a no-op frontier)."""
+        """Re-applying a snapshot that a completed refresh already applied
+        (same pages, new fingerprint) finds an empty frontier and still
+        leaves every table equal to the from-scratch build. Nothing is
+        killed here: both apply_increment calls run to completion. A
+        refresh killed between two row-level replaces is ROADMAP item
+        2 (a), which still needs its own test."""
         from chunksilo_spark.plans.pipeline import apply_increment, run_pipeline
         from chunksilo_spark.sources.corpus import aliases_df
 
@@ -174,9 +176,9 @@ class TestApplyIncrement:
         scratch_dir = str(tmp_path / "scratch")
         run_pipeline(spark, p1, aliases, incr_dir, fingerprint="v1")
 
-        # simulate the kill: run only the row-level half by applying, then
-        # re-apply the SAME snapshot (second pass sees an all-unchanged
-        # frontier and must still rebuild the global tables consistently)
+        # apply, then re-apply the SAME snapshot: the second pass sees an
+        # all-unchanged frontier and must still rebuild the global tables
+        # consistently
         apply_increment(spark, p2, aliases, incr_dir, fingerprint="v2")
         got = apply_increment(spark, p2, aliases, incr_dir, fingerprint="v2b")
         want = run_pipeline(spark, p2, aliases, scratch_dir, fingerprint="v2")
